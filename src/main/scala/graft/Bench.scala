@@ -227,13 +227,17 @@ object Bench {
   private[graft] def compactLine(total: Double, quietEquiv: Double,
       nKeys: Int, nFailed: Int, head: String, retriedCount: Int,
       maxSlowPct: Double, maxSlowMtPct: Double, stBase: Double,
-      mtBase: Double, sfDir: String, artifact: String): String =
-    s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir",""" +
+      mtBase: Double, sfDir: String, artifact: String): String = {
+    // the string fields come from the environment (paths, .git), so escape
+    // the two characters that would end a JSON string early
+    def str(v: String): String = v.replace("\\", "\\\\").replace("\"", "\\\"")
+    s"""{"metric":"total","value":$total,"unit":"sec","sf":"${str(sfDir)}",""" +
       s""""quiet_equiv_sec":$quietEquiv,"n_keys":$nKeys,""" +
-      s""""n_failed":$nFailed,"head":"$head","retried_n":$retriedCount,""" +
+      s""""n_failed":$nFailed,"head":"${str(head)}","retried_n":$retriedCount,""" +
       s""""sentinel":{"spin_base_sec":$stBase,"max_slow_pct":$maxSlowPct},""" +
       s""""sentinel_mt":{"spin_base_sec":$mtBase,"max_slow_pct":$maxSlowMtPct},""" +
-      s""""queries_file":"$artifact"}"""
+      s""""queries_file":"${str(artifact)}"}"""
+  }
 
   /** Current git HEAD commit (plain file reads — no process exec), or
     * "unknown". Resolves one level of symbolic ref and falls back to

@@ -27,9 +27,10 @@ case class TrainPoint(id: Long, x: Array[Double], y: Array[Int], w: Array[Double
   * (feature x bin x label) edge histogram per partition (64*16*10 doubles on
   * the harness data), merged on the driver — the gradient-histogram pattern.
   * No explode, no shuffle inside the loop. Weights stay UNNORMALIZED: the
-  * round's normalizer W falls out of the same histogram pass, so
-  * re-weighting needs no extra job (the classic boosting-on-Spark pitfall
-  * of one normalize action per round).
+  * round's normalizer W falls out of the same histogram pass. The reweighted
+  * points are a lazy, persisted map over the previous round's points, so the
+  * NEXT round's histogram pass is also the job that materializes them: a fit
+  * of T rounds runs T jobs.
   *
   * Determinism: partition partials merge in partition-index order; edge
   * argmax is computed on values rounded to 1e-9 with ties broken by
@@ -160,9 +161,12 @@ object AdaBoostMH {
   }
 
   /** Driver-side argmax over the histogram: best stump for this round.
-    * gamma_l(j, theta_b) = (2 * sum_{x>theta_b} w*y - S_l) / W. */
+    * gamma_l(j, theta_b) = (2 * sum_{x>theta_b} w*y - S_l) / W. Throws,
+    * naming the round and W, when no stump has a finite edge (W = 0 or
+    * not finite makes every gamma NaN). */
   private[ml] def bestStump(hist: Array[Double], s: Array[Double], wTot: Double,
-                            grids: Array[Array[Double]], numBins: Int, k: Int): DecisionStump = {
+                            grids: Array[Array[Double]], numBins: Int, k: Int,
+                            round: Int = 1): DecisionStump = {
     var best: DecisionStump = null
     var bestGamma = Double.NegativeInfinity
     val gammaL = new Array[Double](k)
@@ -196,36 +200,57 @@ object AdaBoostMH {
         b -= 1
       }
     }
+    if (best == null)
+      throw new IllegalStateException(
+        s"AdaBoost.MH round $round: no stump has a finite edge (total weight W = $wTot)")
     best
   }
 
-  /** Generic boosting loop over arbitrary multi-labeled points. */
+  /** Below this total weight the next round's weights are scaled up by an
+    * exact power of two. Every round multiplies the mass by Z_t <= 1, and on
+    * separable data Z_t is about 7e-7 (alpha at its gamma cap), so without
+    * it W underflows to 0 after about 53 rounds. Scaling by 2^e is exact
+    * for normal doubles and gamma = edge / W is scale-free, so only runs
+    * that reach the threshold see it, and their stumps are those of exact
+    * arithmetic. */
+  private[ml] val RescaleBelow: Double = Math.scalb(1.0, -500)
+
+  /** Generic boosting loop over arbitrary multi-labeled points.
+    *
+    * One Spark job per round: round t's histogram pass is the first job
+    * over the points reweighted in round t-1, so it also materializes
+    * them (and, every 5th round, their local checkpoint, marked before
+    * that job so lineage stays cut). The superseded points are released
+    * only after that pass, and the last round reweights nothing. */
   def trainCore(spark: SparkSession, points: RDD[TrainPoint],
                 grids: Array[Array[Double]], numBins: Int, k: Int,
                 numRounds: Int): Array[DecisionStump] = {
     var rdd = points.persist(StorageLevel.MEMORY_AND_DISK)
+    var prev: RDD[TrainPoint] = null
     val stumps = Array.newBuilder[DecisionStump]
     for (t <- 1 to numRounds) {
       val (hist, s, wTot) = histogramPass(rdd, grids, numBins, k)
-      val stump = bestStump(hist, s, wTot, grids, numBins, k)
-      stumps += stump
-      val bcast = spark.sparkContext.broadcast(stump)
-      val prev = rdd
-      rdd = prev.map { p =>
-        val st = bcast.value
-        val phi = if (p.x(st.featureIndex) > st.threshold) 1 else -1
-        val nw = new Array[Double](k)
-        var l = 0
-        while (l < k) {
-          nw(l) = p.w(l) * math.exp(-st.alpha * st.votes(l) * p.y(l) * phi)
-          l += 1
-        }
-        p.copy(w = nw)
-      }.persist(StorageLevel.MEMORY_AND_DISK)
-      // cut lineage before it grows one lambda per round
-      if (t % 5 == 0) rdd.localCheckpoint()
-      rdd.count()
-      prev.unpersist(blocking = false)
+      if (prev != null) prev.unpersist(blocking = false)
+      val st = bestStump(hist, s, wTot, grids, numBins, k, t)
+      stumps += st
+      if (t < numRounds) {
+        val scale = if (wTot < RescaleBelow) -Math.getExponent(wTot) else 0
+        prev = rdd
+        // the stump (~120 bytes) rides the closure: no broadcast per round
+        rdd = prev.map { p =>
+          val phi = if (p.x(st.featureIndex) > st.threshold) 1 else -1
+          val nw = new Array[Double](k)
+          var l = 0
+          while (l < k) {
+            nw(l) = p.w(l) * math.exp(-st.alpha * st.votes(l) * p.y(l) * phi)
+            if (scale != 0) nw(l) = Math.scalb(nw(l), scale)
+            l += 1
+          }
+          p.copy(w = nw)
+        }.persist(StorageLevel.MEMORY_AND_DISK)
+        // cut lineage before it grows one lambda per round
+        if (t % 5 == 0) rdd.localCheckpoint()
+      }
     }
     rdd.unpersist(blocking = false)
     stumps.result()
@@ -296,30 +321,31 @@ object AdaBoostMH {
     best
   }
 
-  /** Codegen'd column form of scoreVector + argmax — the hot scoring path.
-    * F_l(x) folds the stumps in round order with the same left-associated
-    * double additions as scoreVector (alpha_t·v_tl is one driver-side
-    * product, phi flips its IEEE sign exactly), and argmax resolves ties
-    * to the lowest label via array_position's first match — so predictions
-    * are identical to predictUdf on every FINITE, fully-populated input
-    * (AdaBoostMHSuite pins it on real data). Edge semantics follow Spark
-    * SQL, which is the engine's contract now that transform uses this
-    * path: a NaN feature compares GREATER than any threshold (+w vote;
-    * the Scala UDF's `>` is false on NaN), and a null/short array yields
-    * a null comparison -> -w vote (the UDF would throw). Unlike the UDF
-    * this stays inside whole-stage codegen: no serialization boundary per
-    * row, ~T·K fused when() branches. The UDF stays as the fallback for
-    * callers without a Column in hand. */
+  /** Column form of scoreVector + argmax — the hot scoring path: one
+    * [[graft.functions.StumpEnsembleArgmax]] expression carrying the model
+    * as packed arrays, so the plan has one node over `v` at any T and each
+    * row runs one T·K loop inside whole-stage codegen. F_l(x) folds the
+    * stumps in round order from the first term with the same double
+    * additions as scoreVector (alpha_t·v_tl is one driver-side product,
+    * phi flips its IEEE sign exactly), and argmax resolves ties to the
+    * lowest label — so predictions are identical to predictUdf on every
+    * FINITE, fully-populated input (AdaBoostMHSuite pins it on real data).
+    * Edge semantics follow Spark SQL's double ordering: a NaN feature is
+    * GREATER than any threshold (+w vote; the Scala UDF's `>` is false on
+    * NaN). A null array or a null element votes -w (the UDF would throw),
+    * and an array shorter than a stump's feature index throws an error
+    * naming that index. `v` may be any numeric array; it is widened to
+    * array<double>, which is exact. */
   def predictColumn(stumps: Array[DecisionStump], v: Column): Column = {
-    val scores = (0 until NumLabels).map { l =>
-      stumps.map { st =>
-        val w = st.alpha * st.votes(l)
-        when(element_at(v, st.featureIndex + 1) > st.threshold, lit(w))
-          .otherwise(lit(-w))
-      }.reduceLeft(_ + _)
+    val k = NumLabels
+    val weight = Array.tabulate(stumps.length * k) { i =>
+      val st = stumps(i / k)
+      st.alpha * st.votes(i % k)
     }
-    val f = array(scores: _*)
-    (array_position(f, array_max(f)) - 1).cast("int")
+    org.apache.spark.sql.GraftSqlBridge.column(graft.functions.StumpEnsembleArgmax(
+      org.apache.spark.sql.GraftSqlBridge.expression(v.cast("array<double>")),
+      stumps.map(_.featureIndex).toIndexedSeq, stumps.map(_.threshold).toIndexedSeq,
+      weight.toIndexedSeq, k))
   }
 }
 

@@ -47,16 +47,21 @@ object LoopCheckpoint {
     * others rely on the harness sweep, as before). */
   def keyed(df: DataFrame, key: String): (DataFrame, Set[Int]) = {
     val sc = df.sparkSession.sparkContext
-    val before = sc.getPersistentRDDs.keySet
-    val cp = df.localCheckpoint()
-    val pinned = sc.getPersistentRDDs.keySet.diff(before).toSet
+    // both delta windows and the release hold Scratch.trackLock, like every
+    // other attribution site: a concurrent pipeline's eager checkpoint must
+    // not land inside them and be released as this call's plain copy
+    val (cp, pinned) = Scratch.trackLock.synchronized {
+      val before = sc.getPersistentRDDs.keySet
+      val cp = df.localCheckpoint()
+      (cp, sc.getPersistentRDDs.keySet.diff(before).toSet)
+    }
     val bytes = sc.getRDDStorageInfo
       .filter(i => pinned.contains(i.id))
       .map(i => i.memSize + i.diskSize).sum
     val threshold = df.sparkSession.conf
       .get(ThresholdKey, DefaultThreshold.toString).toLong
     if (bytes < threshold) (cp, pinned)
-    else {
+    else Scratch.trackLock.synchronized {
       val beforeRe = sc.getPersistentRDDs.keySet
       val re = cp.repartition(col(key)).sortWithinPartitions(key)
         .localCheckpoint()

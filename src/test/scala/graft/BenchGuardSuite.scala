@@ -136,4 +136,17 @@ class BenchGuardSuite extends AnyFunSuite {
     assert(m.get("sentinel_mt").get("max_slow_pct").asDouble() > 19.0)
     assert(m.get("queries_file").asText() == "BENCH_FULL.json.latest")
   }
+
+  test("compact final line: a backslash or quote in a string field stays valid JSON") {
+    val sf = "C:\\bench \"sf0.1\"\\"
+    val art = "out\\\"q\".json"
+    val line = Bench.compactLine(total = 1.5, quietEquiv = 1.0, nKeys = 1, nFailed = 0,
+      head = "h\"\\", retriedCount = 0, maxSlowPct = 1.0, maxSlowMtPct = 1.0,
+      stBase = 0.5, mtBase = 0.4, sfDir = sf, artifact = art)
+    val m = new com.fasterxml.jackson.databind.ObjectMapper().readTree(line)
+    assert(m.get("sf").asText() == sf)
+    assert(m.get("queries_file").asText() == art)
+    assert(m.get("head").asText() == "h\"\\")
+    assert(m.get("value").asDouble() == 1.5)
+  }
 }

@@ -205,6 +205,52 @@ class AdaBoostMHSuite extends SparkSpec {
     }
   }
 
+  test("fit runs one Spark job per round") {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val tally = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    val pts = fixture
+    org.apache.spark.SparkTestHooks.drainListeners(sc)
+    sc.addSparkListener(tally)
+    try {
+      // 12 rounds cross two 5-round local checkpoints
+      val stumps = AdaBoostMH.trainCore(spark, pts, grids, numBins, k, 12)
+      org.apache.spark.SparkTestHooks.drainListeners(sc)
+      assert(stumps.length === 12)
+    } finally sc.removeSparkListener(tally)
+    assert(jobs.get() === 12)
+  }
+
+  test("separable data: T=200 trains without the weight mass underflowing") {
+    // one stump (x > 99.5) separates both labels, so gamma hits its cap,
+    // alpha = 14.16 and every round scales the mass by about 7e-7: without
+    // rescaling, W underflows to 0 at round 54
+    val pts = spark.sparkContext.parallelize((0 until 200).map { i =>
+      val y = if (i < 100) Array(1, -1) else Array(-1, 1)
+      TrainPoint(i, Array(i.toDouble), y, Array.fill(2)(1.0 / 400))
+    }, 2)
+    val g = Array((1 until 16).map(b => b * 199.0 / 16).toArray)
+    val stumps = AdaBoostMH.trainCore(spark, pts, g, 16, 2, 200)
+    assert(stumps.length === 200)
+    assert(stumps.forall(st => st.alpha > 14 && st.alpha < 15), stumps.map(_.alpha).distinct.toSeq)
+    assert(stumps.forall(st => st.featureIndex == 0 && st.threshold > 99 && st.threshold < 100))
+    pts.collect().foreach { p =>
+      val f = AdaBoostMH.scoreVector(stumps, p.x.toSeq, 2)
+      assert(f.map(v => if (v > 0) 1 else -1).toSeq === p.y.toSeq, s"point ${p.id}")
+    }
+  }
+
+  test("bestStump fails loudly, naming the round and W, when W is 0") {
+    val hist = new Array[Double](grids.length * numBins * k)
+    val e = intercept[IllegalStateException] {
+      AdaBoostMH.bestStump(hist, new Array[Double](k), 0.0, grids, numBins, k, round = 54)
+    }
+    assert(e.getMessage.contains("round 54") && e.getMessage.contains("W = 0.0"), e.getMessage)
+  }
+
   test("predictColumn is identical to predictUdf on real embeddings") {
     import org.apache.spark.sql.functions.col
     val df = graft.Tables(spark, "/root/testdata/sf0.001", "embeddings")

@@ -12,17 +12,13 @@ class ScaleJoinsSuite extends SparkSpec {
     spark.sql(s"DROP TABLE IF EXISTS $name")
     // the in-memory catalog forgets tables across JVMs but the managed
     // location persists; remove it so saveAsTable doesn't refuse
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm)
-      f.delete()
-    }
-    val loc = new java.io.File(s"spark-warehouse/$name")
-    if (loc.exists()) rm(loc)
+    val loc = new org.apache.hadoop.fs.Path(spark.conf.get("spark.sql.warehouse.dir"), name)
+    loc.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(loc, true)
   }
 
   test("bucketed fact-fact join plans with zero exchanges") {
-    // warehouse.dir is static conf; the shared session's default (cwd
-    // spark-warehouse/, gitignored) is fine for this catalog write
+    // warehouse.dir is static conf: the session's own (set per forked test
+    // group by the build, else cwd spark-warehouse/) takes this catalog write
     Seq("b_lineitem", "b_orders").foreach(dropTable)
     val li = Tables(spark, sf, "lineitem").select("l_orderkey", "l_quantity")
     val or = Tables(spark, sf, "orders").select("o_orderkey", "o_totalprice")
