@@ -23,18 +23,28 @@ case class TrainPoint(id: Long, x: Array[Double], y: Array[Int], w: Array[Double
 
 /** Multi-class/multi-label AdaBoost.MH over binned decision stumps.
   *
-  * Scale design: each boosting round is ONE distributed pass building a flat
+  * Scale design: every feature is binned ONCE, when the fit starts. The
+  * training state is then a persisted RDD of packed [[AdaBoostMH.Block]]s:
+  * 4,096 points each, one unsigned byte per (point, feature) bin, one byte
+  * per (point, label) sign and one double per (point, label) weight, about
+  * 154 bytes per point on the 64-feature, 10-label benchmark shape. Each
+  * boosting round is ONE distributed pass over those bytes building a flat
   * (feature x bin x label) edge histogram per partition (64*16*10 doubles on
   * the harness data), merged on the driver — the gradient-histogram pattern.
-  * No explode, no shuffle inside the loop. Weights stay UNNORMALIZED: the
-  * round's normalizer W falls out of the same histogram pass. The reweighted
-  * points are a lazy, persisted map over the previous round's points, so the
-  * NEXT round's histogram pass is also the job that materializes them: a fit
-  * of T rounds runs T jobs.
+  * No explode, no shuffle inside the loop, no per-point objects. Weights
+  * stay UNNORMALIZED: the round's normalizer W falls out of the same
+  * histogram pass. The reweighted blocks are a lazy, persisted map over the
+  * previous round's blocks that shares their bins and labels and replaces
+  * only the weights; the stump's `x > theta` test is a byte compare against
+  * a driver-side bin cut (see [[AdaBoostMH.cutOf]]). The NEXT round's
+  * histogram pass is also the job that materializes them: a fit of T
+  * rounds runs T jobs.
   *
   * Determinism: partition partials merge in partition-index order; edge
   * argmax is computed on values rounded to 1e-9 with ties broken by
-  * (featureIndex, threshold) ascending (SURVEY §7.4 pin).
+  * (featureIndex, threshold) ascending (SURVEY §7.4 pin). The blocked
+  * kernels add the same products in the same order as a per-point loop
+  * over the raw features would, so every stump is bit-identical to it.
   */
 object AdaBoostMH {
 
@@ -91,6 +101,70 @@ object AdaBoostMH {
     lo
   }
 
+  /** The bin cut of the stump test `x > theta` for `theta` drawn from the
+    * sorted grid `ts`: `binOf(ts, x) >= cutOf(ts, theta)` exactly when
+    * `x > theta`. For non-NaN theta the cut is #{t <= theta}: every t <=
+    * theta is below any x > theta, while for x <= theta the threshold
+    * theta itself is counted by the cut but not by binOf. That holds for
+    * duplicate thresholds, +-0.0 (equal under both tests) and +-Inf, and a
+    * NaN x has bin 0 below every such cut. No x is greater than a NaN
+    * theta, so its cut lies above every bin. */
+  private[ml] def cutOf(ts: Array[Double], theta: Double): Int =
+    if (theta.isNaN) ts.length + 1 else ts.count(_ <= theta)
+
+  /** Bins are stored as unsigned bytes, so a fit takes at most 256. */
+  private[ml] val MaxBins = 256
+
+  /** Points per [[Block]]: large enough that per-block costs vanish, small
+    * enough that no block array grows with the partition. */
+  private[ml] val BlockSize = 4096
+
+  /** Up to [[BlockSize]] training points, packed: `bins(i*dims + j)` is the
+    * unsigned bin of point i's feature j, `y(i*k + l)` its +-1 label sign
+    * and `w(i*k + l)` its unnormalized weight. Reweighting replaces only
+    * `w`; `bins` and `y` are shared by every round's blocks. */
+  private[ml] case class Block(n: Int, bins: Array[Byte], y: Array[Byte], w: Array[Double])
+
+  /** Bin every point once and pack each partition into [[Block]]s, filled
+    * as the partition's iterator streams (a partition is never held whole).
+    * Lazy: the first job over the result runs it. Each grid must have at
+    * most MaxBins - 1 thresholds, so every bin fits in a byte. */
+  private[ml] def blockify(points: RDD[TrainPoint], grids: Array[Array[Double]],
+                           k: Int): RDD[Block] = {
+    val dims = grids.length
+    points.mapPartitions { it =>
+      new Iterator[Block] {
+        def hasNext: Boolean = it.hasNext
+        def next(): Block = {
+          val bins = new Array[Byte](BlockSize * dims)
+          val y = new Array[Byte](BlockSize * k)
+          val w = new Array[Double](BlockSize * k)
+          var n = 0
+          while (n < BlockSize && it.hasNext) {
+            val p = it.next()
+            var j = 0
+            while (j < dims) {
+              bins(n * dims + j) = binOf(grids(j), p.x(j)).toByte
+              j += 1
+            }
+            var l = 0
+            while (l < k) {
+              require(p.y(l) == 1 || p.y(l) == -1,
+                s"label sign ${p.y(l)} at label $l of point ${p.id} is not +-1")
+              y(n * k + l) = p.y(l).toByte
+              w(n * k + l) = p.w(l)
+              l += 1
+            }
+            n += 1
+          }
+          if (n == BlockSize) Block(n, bins, y, w)
+          else Block(n, java.util.Arrays.copyOf(bins, n * dims),
+            java.util.Arrays.copyOf(y, n * k), java.util.Arrays.copyOf(w, n * k))
+        }
+      }
+    }
+  }
+
   private type HistPartial = (Array[Double], Array[Double], Double)
 
   /** Executor-level tree fan-in: at P partitions the driver receives
@@ -115,34 +189,43 @@ object AdaBoostMH {
 
   /** One pass: flat hist[((j*numBins)+bin)*k + l] = sum of w*y over points
     * falling in that bin, plus per-label totals S(l) and global mass W.
-    * Partials are merged through a deterministic tree (groups of
+    * Each point's w*y products are formed once and added to S and to its
+    * bin in every feature, in point order, exactly as a per-point loop
+    * would. Partials are merged through a deterministic tree (groups of
     * MergeBranch consecutive partition ids per level, each group merged in
     * ascending-pid order), so driver load is O(MergeBranch), not O(P),
     * and the merge sequence — hence every stump — is identical on every
     * run for a given partitioning. */
-  private[ml] def histogramPass(rdd: RDD[TrainPoint], grids: Array[Array[Double]],
+  private[ml] def histogramPass(rdd: RDD[Block], grids: Array[Array[Double]],
                                 numBins: Int, k: Int): (Array[Double], Array[Double], Double) = {
     val dims = grids.length
     var parts: RDD[(Int, HistPartial)] = rdd.mapPartitionsWithIndex { (pid, it) =>
       val hist = new Array[Double](dims * numBins * k)
       val s = new Array[Double](k)
+      val wy = new Array[Double](k)
       var wTot = 0.0
-      it.foreach { p =>
-        var l = 0
-        while (l < k) {
-          s(l) += p.w(l) * p.y(l)
-          wTot += p.w(l)
-          l += 1
-        }
-        var j = 0
-        while (j < dims) {
-          val base = (j * numBins + binOf(grids(j), p.x(j))) * k
-          var l2 = 0
-          while (l2 < k) {
-            hist(base + l2) += p.w(l2) * p.y(l2)
-            l2 += 1
+      it.foreach { b =>
+        var i = 0
+        while (i < b.n) {
+          var l = 0
+          while (l < k) {
+            val wl = b.w(i * k + l)
+            wy(l) = wl * b.y(i * k + l)
+            s(l) += wy(l)
+            wTot += wl
+            l += 1
           }
-          j += 1
+          var j = 0
+          while (j < dims) {
+            val base = (j * numBins + (b.bins(i * dims + j) & 0xFF)) * k
+            var l2 = 0
+            while (l2 < k) {
+              hist(base + l2) += wy(l2)
+              l2 += 1
+            }
+            j += 1
+          }
+          i += 1
         }
       }
       Iterator.single((pid, (hist, s, wTot)))
@@ -217,16 +300,33 @@ object AdaBoostMH {
 
   /** Generic boosting loop over arbitrary multi-labeled points.
     *
+    * Bins every feature once: the points become persisted [[Block]]s
+    * (see [[blockify]]), and the input RDD is read only by the first
+    * round. Every later round streams the packed bytes: the histogram
+    * pass reads each (point, feature) bin, and the reweight decides the
+    * stump's `x > theta` as `bin >= cutOf(grids(f), theta)`, computed once
+    * on the driver. Both keep the arithmetic, and its order, of a
+    * per-point loop over the raw features, so the stumps are those of that
+    * loop bit for bit. `numBins` may be at most 256, since bins are bytes.
+    *
     * One Spark job per round: round t's histogram pass is the first job
-    * over the points reweighted in round t-1, so it also materializes
-    * them (and, every 5th round, their local checkpoint, marked before
-    * that job so lineage stays cut). The superseded points are released
-    * only after that pass, and the last round reweights nothing. */
+    * over the blocks reweighted in round t-1 (round 1's over the freshly
+    * binned blocks), so it also materializes them (and, every 5th round,
+    * their local checkpoint, marked before that job so lineage stays cut).
+    * The superseded blocks are released only after that pass, and the
+    * last round reweights nothing. */
   def trainCore(spark: SparkSession, points: RDD[TrainPoint],
                 grids: Array[Array[Double]], numBins: Int, k: Int,
                 numRounds: Int): Array[DecisionStump] = {
-    var rdd = points.persist(StorageLevel.MEMORY_AND_DISK)
-    var prev: RDD[TrainPoint] = null
+    require(numBins <= MaxBins,
+      s"AdaBoost.MH stores bins as bytes: numBins = $numBins exceeds $MaxBins")
+    grids.zipWithIndex.foreach { case (ts, j) =>
+      require(ts.length < numBins,
+        s"feature $j has ${ts.length} thresholds; numBins = $numBins allows ${numBins - 1}")
+    }
+    val dims = grids.length
+    var rdd = blockify(points, grids, k).persist(StorageLevel.MEMORY_AND_DISK)
+    var prev: RDD[Block] = null
     val stumps = Array.newBuilder[DecisionStump]
     for (t <- 1 to numRounds) {
       val (hist, s, wTot) = histogramPass(rdd, grids, numBins, k)
@@ -237,16 +337,25 @@ object AdaBoostMH {
         val scale = if (wTot < RescaleBelow) -Math.getExponent(wTot) else 0
         prev = rdd
         // the stump (~120 bytes) rides the closure: no broadcast per round
-        rdd = prev.map { p =>
-          val phi = if (p.x(st.featureIndex) > st.threshold) 1 else -1
-          val nw = new Array[Double](k)
-          var l = 0
-          while (l < k) {
-            nw(l) = p.w(l) * math.exp(-st.alpha * st.votes(l) * p.y(l) * phi)
-            if (scale != 0) nw(l) = Math.scalb(nw(l), scale)
-            l += 1
+        val f = st.featureIndex
+        val cut = cutOf(grids(f), st.threshold)
+        val alpha = st.alpha
+        val votes = st.votes
+        rdd = prev.map { b =>
+          val nw = new Array[Double](b.n * k)
+          var i = 0
+          while (i < b.n) {
+            val phi = if ((b.bins(i * dims + f) & 0xFF) >= cut) 1 else -1
+            var l = 0
+            while (l < k) {
+              val o = i * k + l
+              nw(o) = b.w(o) * math.exp(-alpha * votes(l) * b.y(o) * phi)
+              if (scale != 0) nw(o) = Math.scalb(nw(o), scale)
+              l += 1
+            }
+            i += 1
           }
-          p.copy(w = nw)
+          b.copy(w = nw)
         }.persist(StorageLevel.MEMORY_AND_DISK)
         // cut lineage before it grows one lambda per round
         if (t % 5 == 0) rdd.localCheckpoint()
@@ -361,7 +470,7 @@ class AdaBoostMHClassifier(override val uid: String)
   def setNumRounds(v: Int): this.type = set(numRounds, v)
 
   val numBins = new IntParam(this, "numBins", "threshold bins per feature",
-    ParamValidators.gtEq(2))
+    ParamValidators.inRange(2, AdaBoostMH.MaxBins))
   setDefault(numBins, 16)
   def setNumBins(v: Int): this.type = set(numBins, v)
 

@@ -112,9 +112,14 @@ object SparseRidge {
     * labeled docs without feature rows. */
   private def groupedRaw(feat: DataFrame, labels: DataFrame): DataFrame = {
     val biasOnly = array(struct(lit(BiasDim).as("dim"), lit(1.0).as("v")))
+    val dim = col("dim").cast("long")
     val g = feat
       .filter(col("dim").isNotNull)
-      .select(col("id"), col("dim").cast("long").as("dim"),
+      .select(col("id"),
+        // a real dim equal to the sentinel would merge into the bias slot
+        when(dim === BiasDim, raise_error(lit(
+          s"sparse ridge: feature dim $BiasDim is reserved for the bias term")))
+          .otherwise(dim).as("dim"),
         col("v").cast("double").as("v"))
       .groupBy("id")
       .agg(concat(

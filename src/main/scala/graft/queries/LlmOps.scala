@@ -2371,21 +2371,24 @@ object LlmOps {
     val spark = cands.sparkSession
     import spark.implicits._
     val oneMinus = 1.0 - lambda // ONE ieee subtraction, mirrored in the oracle
+    val localLimit = spark.conf
+      .get("spark.graft.mmr.localLimit", "200000").toLong
+    // the fused probe below collects up to localLimit + 1 rows into an array
+    require(localLimit < Int.MaxValue - 1,
+      s"spark.graft.mmr.localLimit = $localLimit must be below ${Int.MaxValue - 1}")
     val before = spark.sparkContext.getPersistentRDDs.keySet
     try {
       val cd = cands.select(col("q_id").cast("long"), col("c_id").cast("long"),
         col("rel").cast("double")).localCheckpoint()
       val sm = sims.select(col("q_id").cast("long"), col("a").cast("long"),
         col("b").cast("long"), col("sim").cast("double")).localCheckpoint()
-      val localLimit = spark.conf
-        .get("spark.graft.mmr.localLimit", "200000").toLong
       // size probe and local-path collect FUSED (guide §1.2: the two
       // count() jobs only existed to decide the path): limit(n+1) either
       // returns the COMPLETE frame (≤ n rows — it IS the collect) or
       // n+1 rows proving the distributed loop is the right path. Two
       // driver round-trips instead of four per rerank; reads the
       // checkpoints, never recomputes the inputs.
-      val localN = math.min(localLimit + 1, Int.MaxValue - 1L).toInt
+      val localN = (localLimit + 1).toInt
       val cdRows = cd.limit(localN).as[(Long, Long, Double)].collect()
       if (cdRows.length <= localLimit) {
         val smRows = sm.limit(localN).as[(Long, Long, Long, Double)].collect()

@@ -55,16 +55,31 @@ object MultiLabelText {
       .flatMap(parseLine(_, dim, numLabels))
   }
 
-  /** Adapter into the boosting core: +-1 label vectors, uniform weights. */
+  /** Adapter into the boosting core: +-1 label vectors, uniform weights.
+    * Parses the text in ONE job, which counts each partition's points: m is
+    * their sum, and partition p's ids start at the sum of the counts before
+    * it — the ids `zipWithIndex` would give. The returned RDD parses again
+    * when it is read. */
   def toTrainPoints(ds: Dataset[MultiLabeledPoint], numLabels: Int): RDD[TrainPoint] = {
-    val m = ds.count()
+    val rows = ds.rdd
+    val counts = rows.sparkContext.runJob(rows, (it: Iterator[MultiLabeledPoint]) => {
+      var n = 0L
+      while (it.hasNext) { it.next(); n += 1 }
+      n
+    })
+    val m = counts.sum
     require(m > 0, "empty training input: no parseable points (weights would be 1/0)")
     val w0 = 1.0 / (m * numLabels)
-    ds.rdd.zipWithIndex().map { case (p, id) =>
-      val pos = p.labels.toSet
-      TrainPoint(id, p.features,
-        Array.tabulate(numLabels)(l => if (pos(l)) 1 else -1),
-        Array.fill(numLabels)(w0))
+    val starts = counts.scanLeft(0L)(_ + _)
+    rows.mapPartitionsWithIndex { (pid, it) =>
+      var id = starts(pid) - 1
+      it.map { p =>
+        id += 1
+        val pos = p.labels.toSet
+        TrainPoint(id, p.features,
+          Array.tabulate(numLabels)(l => if (pos(l)) 1 else -1),
+          Array.fill(numLabels)(w0))
+      }
     }
   }
 }

@@ -20,7 +20,8 @@ class AdaBoostMHSuite extends SparkSpec {
   }
 
   test("histogram pass: global mass and per-label totals") {
-    val (_, s, w) = AdaBoostMH.histogramPass(fixture, grids, numBins, k)
+    val (_, s, w) =
+      AdaBoostMH.histogramPass(AdaBoostMH.blockify(fixture, grids, k), grids, numBins, k)
     assert(math.abs(w - 1.0) < 1e-12)
     // S_0 = 0.125*(+1+1-1-1) = 0 ; S_1 = 0.125*(-1-1+1-1) = -0.25
     assert(math.abs(s(0) - 0.0) < 1e-12)
@@ -28,7 +29,8 @@ class AdaBoostMHSuite extends SparkSpec {
   }
 
   test("best stump matches the hand-computed golden (f0, theta=2.5)") {
-    val (hist, s, w) = AdaBoostMH.histogramPass(fixture, grids, numBins, k)
+    val (hist, s, w) =
+      AdaBoostMH.histogramPass(AdaBoostMH.blockify(fixture, grids, k), grids, numBins, k)
     val st = AdaBoostMH.bestStump(hist, s, w, grids, numBins, k)
     assert(st.featureIndex === 0)
     assert(st.threshold === 2.5)
@@ -38,7 +40,8 @@ class AdaBoostMHSuite extends SparkSpec {
   }
 
   test("weight update: correct pairs -> Z/14, the single mistake -> Z/2") {
-    val (hist, s, w) = AdaBoostMH.histogramPass(fixture, grids, numBins, k)
+    val (hist, s, w) =
+      AdaBoostMH.histogramPass(AdaBoostMH.blockify(fixture, grids, k), grids, numBins, k)
     val st = AdaBoostMH.bestStump(hist, s, w, grids, numBins, k)
     val kk = k // local copies: the closure must not capture the suite
     val updated = fixture.map { p =>
@@ -183,9 +186,11 @@ class AdaBoostMHSuite extends SparkSpec {
   test("tree-merged histogram: partition count does not change the pass") {
     // 40 > MergeBranch partitions exercises a full tree level; the fixture
     // weights (0.125) are exact in binary, so partials must agree to 1e-12
-    val (h2, s2, w2) = AdaBoostMH.histogramPass(fixture, grids, numBins, k)
+    val (h2, s2, w2) =
+      AdaBoostMH.histogramPass(AdaBoostMH.blockify(fixture, grids, k), grids, numBins, k)
     val (h40, s40, w40) =
-      AdaBoostMH.histogramPass(fixture.repartition(40), grids, numBins, k)
+      AdaBoostMH.histogramPass(AdaBoostMH.blockify(fixture.repartition(40), grids, k),
+        grids, numBins, k)
     assert(math.abs(w2 - w40) < 1e-12)
     s2.zip(s40).foreach { case (a, b) => assert(math.abs(a - b) < 1e-12) }
     h2.zip(h40).foreach { case (a, b) => assert(math.abs(a - b) < 1e-12) }
@@ -241,6 +246,131 @@ class AdaBoostMHSuite extends SparkSpec {
       val f = AdaBoostMH.scoreVector(stumps, p.x.toSeq, 2)
       assert(f.map(v => if (v > 0) 1 else -1).toSeq === p.y.toSeq, s"point ${p.id}")
     }
+  }
+
+  test("bin cut: binOf(ts, x) >= cutOf(ts, theta) exactly when x > theta") {
+    val rnd = new scala.util.Random(7)
+    val edges = Array(Double.NaN, -0.0, 0.0, Double.PositiveInfinity,
+      Double.NegativeInfinity, 1.0, -1.0, Double.MinPositiveValue, Double.MaxValue)
+    def sortedGrid(xs: Array[Double]): Array[Double] = {
+      val ts = xs.clone(); java.util.Arrays.sort(ts); ts
+    }
+    val randomGrids = (1 to 200).map { _ =>
+      sortedGrid(Array.fill(1 + rnd.nextInt(20)) {
+        if (rnd.nextInt(4) == 0) edges(rnd.nextInt(edges.length))
+        else math.round(rnd.nextGaussian() * 4) / 2.0 // duplicates likely
+      })
+    }
+    val df = spark.range(0, 200).selectExpr(
+      "array(CAST(id AS DOUBLE), CAST(id % 7 AS DOUBLE), 3.0D) AS embedding")
+    val gridded = AdaBoostMH.thresholdGrid(df, numBins = 8) ++ // last: lo == hi
+      AdaBoostMH.thresholdGridQuantile(df, numBins = 8)
+    val special = Seq(Array(Double.NaN, Double.NaN), Array(0.0, -0.0, 0.0),
+      Array(-0.0, 0.0), Array(Double.NegativeInfinity, Double.PositiveInfinity),
+      Array(Double.PositiveInfinity, Double.PositiveInfinity, Double.NaN))
+    val grids = randomGrids ++ gridded ++ special
+    assert(gridded.last.distinct.toSeq === Seq(3.0), "lo == hi gives an all-equal grid")
+    grids.foreach { ts =>
+      val xs = edges ++ ts ++ ts.map(t => math.nextUp(t)) ++ ts.map(t => math.nextDown(t)) ++
+        Array.fill(20)(rnd.nextGaussian() * 4)
+      ts.foreach { theta =>
+        val cut = AdaBoostMH.cutOf(ts, theta)
+        xs.foreach { x =>
+          assert((AdaBoostMH.binOf(ts, x) >= cut) == (x > theta),
+            s"grid ${ts.toSeq}, theta $theta, x $x, cut $cut")
+        }
+      }
+    }
+  }
+
+  /** The per-point loop the blocked kernels replaced, run on the driver
+    * over each partition's points: binOf on x in every histogram pass,
+    * partials tree-merged like histogramPass, reweight on x > theta. */
+  private def perPointFit(parts: Array[Array[TrainPoint]], g: Array[Array[Double]],
+                          bins: Int, kk: Int, rounds: Int): Array[DecisionStump] = {
+    def merge(a: (Array[Double], Array[Double], Double),
+              b: (Array[Double], Array[Double], Double)) = {
+      for (i <- a._1.indices) a._1(i) += b._1(i)
+      for (l <- a._2.indices) a._2(l) += b._2(l)
+      (a._1, a._2, a._3 + b._3)
+    }
+    var pts = parts
+    (1 to rounds).map { t =>
+      var partials = pts.map { ps =>
+        val hist = new Array[Double](g.length * bins * kk)
+        val s = new Array[Double](kk)
+        var wTot = 0.0
+        ps.foreach { p =>
+          for (l <- 0 until kk) { s(l) += p.w(l) * p.y(l); wTot += p.w(l) }
+          for (j <- g.indices; l <- 0 until kk)
+            hist((j * bins + AdaBoostMH.binOf(g(j), p.x(j))) * kk + l) += p.w(l) * p.y(l)
+        }
+        (hist, s, wTot)
+      }
+      while (partials.length > AdaBoostMH.MergeBranch)
+        partials = partials.grouped(AdaBoostMH.MergeBranch).map(_.reduceLeft(merge)).toArray
+      val (hist, s, wTot) = partials.reduceLeft(merge)
+      val st = AdaBoostMH.bestStump(hist, s, wTot, g, bins, kk, t)
+      val scale = if (wTot < AdaBoostMH.RescaleBelow) -Math.getExponent(wTot) else 0
+      pts = pts.map(_.map { p =>
+        val phi = if (p.x(st.featureIndex) > st.threshold) 1 else -1
+        p.copy(w = Array.tabulate(kk) { l =>
+          val nw = p.w(l) * math.exp(-st.alpha * st.votes(l) * p.y(l) * phi)
+          if (scale != 0) Math.scalb(nw, scale) else nw
+        })
+      })
+      st
+    }.toArray
+  }
+
+  test("blocked trainCore gives the per-point loop's stumps bit for bit") {
+    val sc = spark.sparkContext
+    def same(a: Array[DecisionStump], b: Array[DecisionStump], what: String): Unit = {
+      assert(a.length === b.length, what)
+      a.zip(b).zipWithIndex.foreach { case ((x, y), t) =>
+        assert(x.featureIndex == y.featureIndex && x.threshold == y.threshold &&
+          x.alpha == y.alpha && x.votes.toSeq == y.votes.toSeq,
+          s"$what round ${t + 1}: $x ${x.votes.toSeq} vs $y ${y.votes.toSeq}")
+      }
+    }
+    def check(rdd: org.apache.spark.rdd.RDD[TrainPoint], g: Array[Array[Double]],
+              bins: Int, kk: Int, rounds: Int, what: String): Unit = {
+      // pin the layout once, so both sides see the same points per partition
+      val parts = rdd.glom().collect()
+      val pinned = sc.parallelize(parts.toSeq, parts.length).flatMap(_.toSeq)
+      same(AdaBoostMH.trainCore(spark, pinned, g, bins, kk, rounds),
+        perPointFit(parts, g, bins, kk, rounds), what)
+    }
+    // the separable fixture: rounds past the power-of-two rescale
+    val sep = sc.parallelize((0 until 200).map { i =>
+      val y = if (i < 100) Array(1, -1) else Array(-1, 1)
+      TrainPoint(i, Array(i.toDouble), y, Array.fill(2)(1.0 / 400))
+    }, 2)
+    val sepGrid = Array((1 until 16).map(b => b * 199.0 / 16).toArray)
+    check(sep, sepGrid, 16, 2, 40, "separable")
+    check(sep.repartition(40), sepGrid, 16, 2, 40, "separable, 40 partitions")
+    check(fixture.repartition(40), grids, numBins, k, 6, "fixture, 40 partitions")
+    // two blocks per partition, ties on thresholds, duplicate thresholds
+    // and NaN / +-0.0 / +-Inf features
+    val odd = Array(Double.NaN, -0.0, 0.0, Double.PositiveInfinity, Double.NegativeInfinity)
+    val wide = sc.parallelize((0 until 9000).map { i =>
+      val r = new scala.util.Random(i)
+      TrainPoint(i, Array.tabulate(4)(j =>
+          if (r.nextInt(50) == 0) odd(r.nextInt(odd.length)) else (r.nextInt(9) - 4) / 2.0),
+        Array.tabulate(3)(_ => if (r.nextBoolean()) 1 else -1), Array.fill(3)(1.0 / 27000))
+    }, 2)
+    val wideGrids = Array(Array(-1.5, -0.5, 0.0, 0.0, 0.5, 1.5), Array(-2.0, -1.0, 0.0, 1.0, 2.0),
+      Array(-0.0, 0.0, 1.0), Array(Double.NegativeInfinity, 0.5, Double.PositiveInfinity))
+    check(wide, wideGrids, 8, 3, 12, "9,000 points in 2 partitions")
+  }
+
+  test("more than 256 bins fails loudly: classifier param and trainCore") {
+    intercept[IllegalArgumentException] { new AdaBoostMHClassifier().setNumBins(257) }
+    new AdaBoostMHClassifier().setNumBins(256) // the largest byte-sized bin count
+    val e = intercept[IllegalArgumentException] {
+      AdaBoostMH.trainCore(spark, fixture, grids, numBins = 300, k, 1)
+    }
+    assert(e.getMessage.contains("numBins = 300"), e.getMessage)
   }
 
   test("bestStump fails loudly, naming the round and W, when W is 0") {

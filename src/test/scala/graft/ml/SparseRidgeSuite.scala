@@ -306,6 +306,15 @@ class SparseRidgeSuite extends SparkSpec {
     }
   }
 
+  test("a feature dim equal to the bias sentinel fails instead of merging into the bias") {
+    import spark.implicits._
+    val feat = Seq((1L, 3L, 1.0), (2L, Long.MaxValue, 1.0)).toDF("id", "dim", "v")
+    val labels = Seq((1L, 1.0), (2L, 0.0)).toDF("id", "y")
+    val e = intercept[Exception] { SparseRidge.fit(feat, labels) }
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).map(_.getMessage)
+    assert(msgs.exists(m => m != null && m.contains("reserved for the bias term")), e.toString)
+  }
+
   test("degenerate inputs fail fast") {
     import spark.implicits._
     val empty = Seq.empty[(Long, Long, Double)].toDF("id", "dim", "v")

@@ -107,6 +107,14 @@ class MmrSuite extends SparkSpec {
     finally spark.conf.unset("spark.graft.mmr.localLimit")
   }
 
+  test("a localLimit at Int.MaxValue - 1 or above fails loudly, naming the setting") {
+    spark.conf.set("spark.graft.mmr.localLimit", (Int.MaxValue - 1L).toString)
+    val e =
+      try intercept[IllegalArgumentException] { LlmOps.mmrRerank(cands, sims, k = 3, lambda = 0.5) }
+      finally spark.conf.unset("spark.graft.mmr.localLimit")
+    assert(e.getMessage.contains("spark.graft.mmr.localLimit"), e.getMessage)
+  }
+
   test("driver-side fast path equals the distributed loop bit-for-bit (fixture + real corpus)") {
     def run(df: => org.apache.spark.sql.DataFrame): Seq[Seq[Any]] =
       df.orderBy("q_id", "rn").collect().map(_.toSeq.toVector).toSeq

@@ -52,4 +52,38 @@ class MultiLabelTextSuite extends SparkSpec {
     assert(stumps.head.votes.toSeq === Seq(-1, 1))
     assert(math.abs(stumps.head.alpha - 0.9729550745276566) < 1e-12)
   }
+
+  test("toTrainPoints: one parse job, zipWithIndex ids and 1/(m*k) weights across partitions") {
+    val dir = Files.createTempDirectory("mlparts")
+    // three files -> three partitions of 3, 1 and 2 points; comments and
+    // blanks take no id
+    Files.writeString(dir.resolve("a.txt"), "0 0:1.0\n# c\n1 0:2.0\n- 0:3.0\n")
+    Files.writeString(dir.resolve("b.txt"), "\n0,1 0:4.0 1:1.0\n")
+    Files.writeString(dir.resolve("c.txt"), "1 1:5.0\n0 0:6.0\n")
+    val ds = MultiLabelText.read(spark, dir.toString, dim = 2, numLabels = 2)
+    assert(ds.rdd.getNumPartitions > 1)
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val tally = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    org.apache.spark.SparkTestHooks.drainListeners(sc)
+    sc.addSparkListener(tally)
+    val pts =
+      try {
+        val p = MultiLabelText.toTrainPoints(ds, numLabels = 2)
+        org.apache.spark.SparkTestHooks.drainListeners(sc)
+        p
+      } finally sc.removeSparkListener(tally)
+    assert(jobs.get() === 1)
+    val got = pts.collect()
+    val expected = ds.rdd.zipWithIndex().collect()
+    assert(got.map(_.id).toSeq === (0L until 6L))
+    assert(got.map(p => (p.id, p.x.toSeq)).toSeq ===
+      expected.map { case (p, id) => (id, p.features.toSeq) }.toSeq)
+    assert(got.forall(_.w.forall(_ == 1.0 / (6 * 2))))
+    assert(got.map(_.y.toSeq).toSeq === expected.map { case (p, _) =>
+      Seq(0, 1).map(l => if (p.labels.contains(l)) 1 else -1) }.toSeq)
+  }
 }
