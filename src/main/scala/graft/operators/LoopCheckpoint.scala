@@ -9,22 +9,27 @@ import org.apache.spark.sql.functions.col
   * pre-sort) on the per-round join key ONLY when the frame is big enough
   * for per-round shuffles to matter.
   *
-  * Why gated (optimization guide §2.4 + VERDICT r17 #2): localCheckpoint
-  * preserves outputPartitioning/outputOrdering, so a key-partitioned
-  * checkpoint makes every round's equi-join exchange-free and sort-free on
-  * the O(|E|) side — one build-time exchange instead of iters round
-  * shuffles, the shape that wins at 100 TB. But the repartition pins a
-  * FIXED partition count (spark.sql.shuffle.partitions) into every round:
-  * on the harness's single-row-group testdata, where whole queries are AQE
-  * stage-latency-bound and every frame coalesces to one task, that turns
-  * each round's tiny join into a cores-wide stage and measures 5-15 %
+  * What the large branch does and does not give: its checkpoint's rows
+  * are hash-clustered and sorted on the key (LoopCheckpointSuite checks
+  * this), but the planner cannot see it. Under AQE (the default), Spark
+  * 4.1's localCheckpoint records the adaptive plan's
+  * UnknownPartitioning(0) and an empty ordering, so a round's equi-join
+  * on the key still plans its Exchanges: the branch pays one extra
+  * shuffle and materialization that no round saves. A checkpoint that
+  * declares its partitioning is ROADMAP direction 2.
+  *
+  * Why gated (optimization guide §2.4 + VERDICT r17 #2): the repartition
+  * pins a FIXED partition count (spark.sql.shuffle.partitions) into every
+  * round: on the harness's single-row-group testdata, where whole queries
+  * are AQE stage-latency-bound and every frame coalesces to one task, that
+  * turns each round's tiny join into a cores-wide stage and measures 5-15 %
   * SLOWER (round-18 alternating A/B of q_graph_pagerank,
   * q_graph_communities — the same mechanism as round 17's rejected
-  * scan-spreading). The gate keeps both regimes honest: below the
-  * threshold the plain checkpoint is returned (AQE coalesces the round
-  * joins), above it the frame is re-checkpointed key-partitioned — the
-  * one extra materialization pass is amortized against iters-1 saved
-  * full-frame shuffles.
+  * scan-spreading). Below the threshold the plain checkpoint is returned
+  * (AQE coalesces the round joins); above it the frame is re-checkpointed
+  * key-partitioned, a pass meant to be amortized against iters-1 saved
+  * full-frame shuffles once the planner can see the partitioning (it
+  * cannot today, see above).
   *
   * The threshold is the checkpointed frame's MEASURED storage size
   * (deterministic input → same decision every run; and both shapes

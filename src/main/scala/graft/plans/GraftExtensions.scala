@@ -130,152 +130,11 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       new ExpressionInfo(classOf[graft.functions.BloomAgg].getName, "graft_bloom"),
       (exprs: Seq[Expression]) =>
         graft.functions.BloomAgg.fromArgs(exprs).toAggregateExpression()))
-    ext.injectTableFunction((
-      FunctionIdentifier("graft_topk_per_key"),
-      new ExpressionInfo(classOf[TopKPerKey].getName, "graft_topk_per_key"),
-      SqlSurface.topKPerKeyBuilder _))
-    ext.injectTableFunction((
-      FunctionIdentifier("graft_asof_backward"),
-      new ExpressionInfo(classOf[AsOfBackwardPlaceholder].getName, "graft_asof_backward"),
-      SqlSurface.asofBackwardBuilder _))
-    ext.injectTableFunction((
-      FunctionIdentifier("graft_dedup_against"),
-      new ExpressionInfo(classOf[DedupAgainstPlaceholder].getName, "graft_dedup_against"),
-      SqlSurface.dedupAgainstBuilder _))
-    ext.injectTableFunction((
-      FunctionIdentifier("graft_ivf_search"),
-      new ExpressionInfo(classOf[IvfSearchPlaceholder].getName, "graft_ivf_search"),
-      SqlSurface.ivfSearchBuilder _))
-    ext.injectTableFunction((
-      FunctionIdentifier("graft_pq_search"),
-      new ExpressionInfo(classOf[PqSearchPlaceholder].getName, "graft_pq_search"),
-      SqlSurface.pqSearchBuilder _))
-    ext.injectTableFunction((
-      FunctionIdentifier("graft_ivf_staleness"),
-      new ExpressionInfo(classOf[IvfStalenessPlaceholder].getName, "graft_ivf_staleness"),
-      SqlSurface.ivfStalenessBuilder _))
-    ext.injectTableFunction((
-      FunctionIdentifier("graft_pca_staleness"),
-      new ExpressionInfo(classOf[PcaStalenessPlaceholder].getName, "graft_pca_staleness"),
-      SqlSurface.pcaStalenessBuilder _))
-    ext.injectTableFunction((
-      FunctionIdentifier("graft_probe_staleness"),
-      new ExpressionInfo(classOf[ProbeStalenessPlaceholder].getName, "graft_probe_staleness"),
-      SqlSurface.probeStalenessBuilder _))
-    ext.injectTableFunction((
-      FunctionIdentifier("graft_knn_search"),
-      new ExpressionInfo(classOf[KnnSearchPlaceholder].getName, "graft_knn_search"),
-      SqlSurface.knnSearchBuilder _))
-    ext.injectTableFunction((
-      FunctionIdentifier("graft_mmr"),
-      new ExpressionInfo(classOf[MmrPlaceholder].getName, "graft_mmr"),
-      SqlSurface.mmrBuilder _))
-    ext.injectTableFunction((
-      FunctionIdentifier("graft_kcenter"),
-      new ExpressionInfo(classOf[KCenterPlaceholder].getName, "graft_kcenter"),
-      SqlSurface.kCenterBuilder _))
-    ext.injectTableFunction((
-      FunctionIdentifier("graft_domain_cap"),
-      new ExpressionInfo(classOf[DomainCapPlaceholder].getName,
-        "graft_domain_cap"),
-      SqlSurface.domainCapBuilder _))
-    ext.injectTableFunction((
-      FunctionIdentifier("graft_domain_cap_url"),
-      new ExpressionInfo(classOf[DomainCapUrlPlaceholder].getName,
-        "graft_domain_cap_url"),
-      SqlSurface.domainCapUrlBuilder _))
-    ext.injectTableFunction((
-      FunctionIdentifier("graft_registrable_domain"),
-      new ExpressionInfo(classOf[RegistrableDomainPlaceholder].getName,
-        "graft_registrable_domain"),
-      SqlSurface.registrableDomainBuilder _))
-    ext.injectTableFunction((
-      FunctionIdentifier("graft_frontier_batches"),
-      new ExpressionInfo(classOf[FrontierBatchesPlaceholder].getName,
-        "graft_frontier_batches"),
-      SqlSurface.frontierBatchesBuilder _))
-    ext.injectTableFunction((
-      FunctionIdentifier("graft_bpe"),
-      new ExpressionInfo(classOf[BpePlaceholder].getName, "graft_bpe"),
-      SqlSurface.bpeBuilder _))
-    ext.injectTableFunction((
-      FunctionIdentifier("graft_semantic_dedup"),
-      new ExpressionInfo(classOf[SemanticDedupPlaceholder].getName,
-        "graft_semantic_dedup"),
-      SqlSurface.semanticDedupBuilder _))
-    ext.injectTableFunction((
-      FunctionIdentifier("graft_fuzzy_contamination"),
-      new ExpressionInfo(classOf[FuzzyContaminationPlaceholder].getName,
-        "graft_fuzzy_contamination"),
-      SqlSurface.fuzzyContaminationBuilder _))
-    ext.injectTableFunction((
-      FunctionIdentifier("graft_quality_probe"),
-      new ExpressionInfo(classOf[QualityProbePlaceholder].getName,
-        "graft_quality_probe"),
-      SqlSurface.qualityProbeBuilder _))
-    ext.injectTableFunction((
-      FunctionIdentifier("graft_quality_probe_wide"),
-      new ExpressionInfo(classOf[QualityProbeWidePlaceholder].getName,
-        "graft_quality_probe_wide"),
-      SqlSurface.qualityProbeWideBuilder _))
-    ext.injectTableFunction((
-      FunctionIdentifier("graft_shard_assign"),
-      new ExpressionInfo(classOf[ShardAssignPlaceholder].getName,
-        "graft_shard_assign"),
-      SqlSurface.shardAssignBuilder _))
-    ext.injectTableFunction((
-      FunctionIdentifier("graft_knn_search_index"),
-      new ExpressionInfo(classOf[KnnSearchIndexPlaceholder].getName, "graft_knn_search_index"),
-      SqlSurface.knnSearchIndexBuilder _))
-    ext.injectTableFunction((
-      FunctionIdentifier("graft_pagerank"),
-      new ExpressionInfo(classOf[PageRankPlaceholder].getName, "graft_pagerank"),
-      SqlSurface.pageRankBuilder _))
-    ext.injectTableFunction((
-      FunctionIdentifier("graft_connected_components"),
-      new ExpressionInfo(classOf[ConnectedComponentsPlaceholder].getName,
-        "graft_connected_components"),
-      SqlSurface.connectedComponentsBuilder _))
-    ext.injectTableFunction((
-      FunctionIdentifier("graft_label_propagation"),
-      new ExpressionInfo(classOf[LabelPropagationPlaceholder].getName,
-        "graft_label_propagation"),
-      SqlSurface.labelPropagationBuilder _))
-    ext.injectTableFunction((
-      FunctionIdentifier("graft_asof_nearest"),
-      new ExpressionInfo(classOf[AsOfNearestPlaceholder].getName,
-        "graft_asof_nearest"),
-      SqlSurface.asofNearestBuilder _))
-    ext.injectTableFunction((
-      FunctionIdentifier("graft_asof_backward_split"),
-      new ExpressionInfo(classOf[AsOfBackwardSplitPlaceholder].getName,
-        "graft_asof_backward_split"),
-      SqlSurface.asofBackwardSplitBuilder _))
-    ext.injectTableFunction((
-      FunctionIdentifier("graft_linear_probe"),
-      new ExpressionInfo(classOf[LinearProbePlaceholder].getName,
-        "graft_linear_probe"),
-      SqlSurface.linearProbeBuilder _))
-    ext.injectTableFunction((
-      FunctionIdentifier("graft_pca"),
-      new ExpressionInfo(classOf[PcaPlaceholder].getName, "graft_pca"),
-      SqlSurface.pcaBuilder _))
-    ext.injectTableFunction((
-      FunctionIdentifier("graft_curate"),
-      new ExpressionInfo(classOf[CuratePlaceholder].getName, "graft_curate"),
-      SqlSurface.curateBuilder _))
-    ext.injectTableFunction((
-      FunctionIdentifier("graft_community_labels"),
-      new ExpressionInfo(classOf[CommunityLabelsPlaceholder].getName,
-        "graft_community_labels"),
-      SqlSurface.communityLabelsBuilder _))
-    ext.injectTableFunction((
-      FunctionIdentifier("graft_substr_spans"),
-      new ExpressionInfo(classOf[SubstrSpansPlaceholder].getName,
-        "graft_substr_spans"),
-      SqlSurface.substrSpansBuilder _))
-    ext.injectResolutionRule(ResolveAsOfBackward.apply)
-    ext.injectResolutionRule(ResolveGraftIndexFunctions.apply)
+    SqlSurface.tableFunctions.foreach { case (name, builder) =>
+      ext.injectTableFunction((FunctionIdentifier(name),
+        new ExpressionInfo(classOf[GraftTvf].getName, name), builder))
+    }
+    ext.injectResolutionRule(ResolveGraftTvf.apply)
     ext.injectOptimizerRule(_ => RewriteHofDotProduct)
     ext.injectOptimizerRule(_ => RewriteRankLimit)
     ext.injectPlannerStrategy(_ => TopKPerKeyStrategy)

@@ -609,6 +609,30 @@ class SqlSurfaceSuite extends SparkSpec {
     val e = intercept[Exception](spark.sql(
       "SELECT * FROM graft_community_labels('/definitely/not/an/index')").collect())
     assert(e.getMessage.contains("community index"), e.getMessage)
+    // versions are Long watermarks with gaps allowed: a BIGINT version
+    // literal reads a snapshot committed above Int.MaxValue
+    graft.operators.CommunityIndex.advance(path, 3000000000L,
+      spark.emptyDataFrame.select(lit(0L).as("id")).limit(0),
+      Seq(4L -> 5L).toDF("src", "dst"), keepVersions = 3)
+    val big = spark.sql(
+      s"SELECT * FROM graft_community_labels('$path', 3000000000) ORDER BY id")
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    val apiBig = graft.operators.CommunityIndex.labelsAt(spark, path, 3000000000L)
+      .orderBy("id").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    assert(big === apiBig && big.size === 5, big)
+  }
+
+  test("table-function registry: names are distinct and each one is registered") {
+    val names = SqlSurface.tableFunctions.map(_._1)
+    assert(names.size === 32 && names.distinct === names, names)
+    val registry = spark.sessionState.tableFunctionRegistry
+    names.foreach(n => assert(
+      registry.functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier(n)), n))
+    // a name given twice is refused where the registry is built, by name
+    val twice = intercept[IllegalArgumentException](SqlSurface.distinctNames(
+      Seq("graft_a" -> 1, "graft_b" -> 2, "graft_a" -> 3)))
+    assert(twice.getMessage.contains("graft_a") && !twice.getMessage.contains("graft_b"),
+      twice.getMessage)
   }
 
   test("graft_substr_spans: SQL round trip equals the gated query; args validated") {
