@@ -149,24 +149,16 @@ object IvfIndex {
     * [[sweep]] (ADVICE r10: a long-lived serving session issuing many
     * filtered searches must have a release hook; Bench's per-query global
     * unpersist already covers the harness). */
-  private val pinnedIds =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+  private val pinned =
+    java.util.concurrent.ConcurrentHashMap.newKeySet[org.apache.spark.rdd.RDD[_]]()
 
   /** Unpersist every allowlist block a filtered search of this JVM
     * pinned; returns the count released. Consume-then-sweep: the blocks
     * are lineage-truncated checkpoints, so sweeping while a returned
     * search frame is still to be re-consumed fails that frame loudly
     * (checkpoint-block-not-found), never silently. */
-  def sweep(spark: SparkSession): Int = {
-    val live = spark.sparkContext.getPersistentRDDs
-    var n = 0
-    val it = pinnedIds.iterator()
-    while (it.hasNext) {
-      live.get(it.next()).foreach { r => r.unpersist(blocking = false); n += 1 }
-      it.remove()
-    }
-    n
-  }
+  def sweep(spark: SparkSession): Int =
+    graft.operators.Scratch.releaseTracked(pinned)
 
   private def restrict(corpus: DataFrame, allowed: Option[DataFrame]): DataFrame =
     allowed match {
@@ -176,15 +168,10 @@ object IvfIndex {
         // re-execute the allowlist's producing plan (often a filter over
         // a corpus-scale table) — one execution, blocks read thereafter.
         // Pinned until the caller's query lifecycle ends (Bench sweeps
-        // per query; library callers call [[sweep]] — the tracked ids
+        // per query; library callers call [[sweep]] — the tracked RDDs
         // make the hygiene contract enforceable instead of aspirational).
-        val sc = a.sparkSession.sparkContext
-        val ids = graft.operators.Scratch.trackLock.synchronized {
-          val before = sc.getPersistentRDDs.keySet
-          val ck = a.select("vec_id").localCheckpoint(eager = false)
-          (sc.getPersistentRDDs.keySet -- before).foreach(pinnedIds.add)
-          ck
-        }
+        val ids = a.select("vec_id").localCheckpoint(eager = false)
+        pinned.add(graft.operators.Scratch.rddOf(ids))
         val limit = corpus.sparkSession.conf
           .get("spark.graft.ivf.allowedBroadcastLimit", "100000").toLong
         val n = ids.agg(count(lit(1))).head().getLong(0)
@@ -573,10 +560,9 @@ object IvfIndex {
     require(m >= 1 && d % m == 0, s"need d ($d) divisible by m ($m)")
     require(ksub >= 1 && iters >= 0, s"need ksub >= 1, iters >= 0")
     val dsub = d / m
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    try {
+    graft.operators.Scratch.withSweep(spark) {
       // materialize residuals once: every Lloyd pass (and the seed
-      // collect) reuses them; swept in finally (fully consumed here)
+      // collect) reuses them; swept on exit (fully consumed here)
       val res = residuals(df, coarse).localCheckpoint()
       val seeds = res.orderBy("vec_id").limit(ksub).collect()
         .map(_.getSeq[Double](2))
@@ -602,10 +588,6 @@ object IvfIndex {
           }))
       }
       PqModel(books)
-    } finally {
-      val live = spark.sparkContext.getPersistentRDDs
-      (live.keySet -- before).foreach(id =>
-        live.get(id).foreach(_.unpersist(blocking = false)))
     }
   }
 

@@ -122,23 +122,19 @@ object KnnGraph {
     graft.operators.GroupLimits.topKPerKey(
       edges, Seq("id"), Seq(col("sim").desc, col("nbr")), k)
 
-  /** Eagerly localCheckpoint `df`, then unpersist the blocks a superseded
-    * round pinned (ADVICE r6): round i's checkpoint blocks are released as
-    * soon as round i+1's materialize, so repeated [[build]]/[[search]]
-    * calls in a long-lived JVM cannot accumulate the block-manager backlog
-    * docs/long-lived-spark-jvm-hygiene.md documents. Returns the
-    * checkpointed frame plus the persistent-RDD ids it pinned (the next
-    * round's `prev`). The FINAL round's blocks — and the `vecs`/`q`
-    * checkpoints the returned plan still reads — stay pinned until the
-    * caller sweeps (Bench's per-query sweep, or `SparkContext`'s cleaner). */
-  private def checkpointReplacing(df: DataFrame, prev: Set[Int]): (DataFrame, Set[Int]) = {
-    val sc = df.sparkSession.sparkContext
-    val before = sc.getPersistentRDDs.keySet
+  /** Eagerly localCheckpoint `df`, then release the checkpoints a
+    * superseded round pinned (ADVICE r6): round i's checkpoint blocks are
+    * released as soon as round i+1's materialize, so repeated
+    * [[build]]/[[search]] calls in a long-lived JVM cannot accumulate the
+    * block-manager backlog docs/long-lived-spark-jvm-hygiene.md documents.
+    * Returns the checkpointed frame (part of the next round's `prev`).
+    * The FINAL round's blocks — and the `vecs`/`q` checkpoints the
+    * returned plan still reads — stay pinned until the caller sweeps
+    * (Bench's per-query sweep, or `SparkContext`'s cleaner). */
+  private def checkpointReplacing(df: DataFrame, prev: Seq[DataFrame]): DataFrame = {
     val out = df.localCheckpoint() // eager: materialized before prev is dropped
-    val pinned = sc.getPersistentRDDs.keySet.diff(before).toSet
-    val live = sc.getPersistentRDDs
-    prev.foreach(id => live.get(id).foreach(_.unpersist(blocking = false)))
-    (out, pinned)
+    graft.operators.Scratch.release(prev: _*)
+    out
   }
 
   /** The k-NN graph: (id, nbr, sim), exactly <= k rows per id, cosine
@@ -181,7 +177,7 @@ object KnnGraph {
     val smallVecs = n * 64L * 8L < 64L * 1024 * 1024
     var g = topK(
       scoreBoth(lshSeedPairs(vecs, seedBands, seedBits, hotCap), vecs, smallVecs), kk)
-    var pinned = Set.empty[Int]
+    var pinned = Seq.empty[DataFrame] // checkpoints the next round supersedes
     var converged = false
     var rounds = 0
     // does `g` already sit on a materialized checkpoint? (the convergence
@@ -198,16 +194,16 @@ object KnnGraph {
       // depth grows exponentially. n·searchK rows, KBs per thousand nodes.
       // The superseded round's checkpoint blocks are dropped eagerly.
       if (!checkpointed) {
-        val (cg0, p) = checkpointReplacing(g, pinned)
-        g = cg0; pinned = p
+        g = checkpointReplacing(g, pinned)
+        pinned = Seq(g)
       }
       val cg = g
       // the round's own result stays un-checkpointed: the next round (or
       // the final topK below) materializes it, and the returned frame's
       // plan remains inspectable (callers reusing it repeatedly can
       // checkpoint it themselves)
-      val (next, adjPinned) = descentRound(g, vecs, smallVecs, kk)
-      pinned ++= adjPinned
+      val (next, adj) = descentRound(g, vecs, smallVecs, kk)
+      pinned :+= adj
       if (minUpdateFrac > 0.0) {
         // NN-Descent's standard convergence rule: stop when the round
         // changed fewer than minUpdateFrac of the n·searchK graph slots
@@ -220,11 +216,10 @@ object KnnGraph {
         // PREVIOUS round's blocks stay pinned through the anti-join (it
         // reads them; a truncated-lineage checkpoint cannot recompute),
         // then drop.
-        val (cn, p2) = checkpointReplacing(next, Set.empty)
+        val cn = checkpointReplacing(next, Seq.empty)
         val updates = cn.join(cg, Seq("id", "nbr"), "left_anti").count()
-        val live = vecs.sparkSession.sparkContext.getPersistentRDDs
-        pinned.foreach(id => live.get(id).foreach(_.unpersist(blocking = false)))
-        g = cn; pinned = p2; checkpointed = true
+        graft.operators.Scratch.release(pinned: _*)
+        g = cn; pinned = Seq(cn); checkpointed = true
         converged = updates <= (minUpdateFrac * n * kk).toLong
       } else {
         g = next
@@ -250,15 +245,15 @@ object KnnGraph {
     * [[graft.operators.LoopCheckpoint.keyed]] additionally pre-partitions
     * it on `id` — the self-join key — when it is big enough for the
     * round's exchanges to matter. Returns the round's result plus the
-    * adjacency's pinned RDD ids; the CALLER folds them into its
-    * round-superseded set so they are swept once the next round (or the
+    * checkpointed adjacency; the CALLER folds it into its
+    * round-superseded set so it is released once the next round (or the
     * convergence count) materializes — never while the returned lazy plan
-    * still needs them. */
+    * still needs it. */
   private def descentRound(g: DataFrame, vecs: DataFrame, smallVecs: Boolean,
-                           kk: Int): (DataFrame, Set[Int]) = {
+                           kk: Int): (DataFrame, DataFrame) = {
     // undirected adjacency: a node's candidates are its neighbors' full
     // neighborhoods in BOTH edge directions (the NN-Descent join)
-    val (adj, adjPinned) = graft.operators.LoopCheckpoint.keyed(
+    val adj = graft.operators.LoopCheckpoint.keyed(
       g.select(col("id"), col("nbr"))
         .unionByName(g.select(col("nbr").as("id"), col("id").as("nbr")))
         .distinct(), "id")
@@ -275,7 +270,7 @@ object KnnGraph {
     val known = adj.filter(col("id") < col("nbr"))
       .select(col("id").as("a"), col("nbr").as("b"))
     val fresh = cand.join(known, Seq("a", "b"), "left_anti")
-    (topK(g.unionByName(scoreBoth(fresh, vecs, smallVecs)), kk), adjPinned)
+    (topK(g.unionByName(scoreBoth(fresh, vecs, smallVecs)), kk), adj)
   }
 
   /** Graph-ANN SEARCH: top-k corpus neighbors for each (possibly
@@ -322,7 +317,6 @@ object KnnGraph {
       s"need k >= 1, rounds >= 0, entries >= 1; got k=$k rounds=$rounds entries=$entries")
     val b = if (beam > 0) beam else 3 * k
     require(b >= k, s"beam must be >= k; got $beam < $k")
-    val sc = graph.sparkSession.sparkContext
     val vecs = normalized(emb).localCheckpoint()
     val smallVecs = vecs.count() * 64L * 8L < 64L * 1024 * 1024
     val q = normalized(queries)
@@ -331,7 +325,7 @@ object KnnGraph {
     // undirected adjacency, materialized once: every round's expand joins
     // it on id — loop-static, so key-partitioned when big enough
     // ([[graft.operators.LoopCheckpoint.keyed]])
-    val (adj, _) = graft.operators.LoopCheckpoint.keyed(
+    val adj = graft.operators.LoopCheckpoint.keyed(
       graph.select(col("id"), col("nbr"))
         .unionByName(graph.select(col("nbr").as("id"), col("id").as("nbr")))
         .distinct(), "id")
@@ -354,19 +348,16 @@ object KnnGraph {
       .withColumn("id", explode(typedlit(entryIds.toSeq)))
     var bm = topB(score(entry), b)
     var visited = entry
-    var pinned = Set.empty[Int]
+    var pinned = Seq.empty[DataFrame]
     for (_ <- 1 to rounds) {
       // checkpoint BOTH round states before dropping either superseded
       // checkpoint: the visited plan references the previous beam's blocks
       // (through the candidate anti-join), so a one-at-a-time
       // replace-and-drop would unpersist blocks the other frame still reads
-      val before = sc.getPersistentRDDs.keySet
       bm = bm.localCheckpoint()
       visited = visited.localCheckpoint()
-      val fresh = sc.getPersistentRDDs.keySet.diff(before).toSet
-      val live = sc.getPersistentRDDs
-      pinned.foreach(id => live.get(id).foreach(_.unpersist(blocking = false)))
-      pinned = fresh
+      graft.operators.Scratch.release(pinned: _*)
+      pinned = Seq(bm, visited)
       val cand = bm.select(col("q_id"), col("id")).join(adj, "id")
         .select(col("q_id"), col("nbr").as("id")).distinct()
         .join(visited, Seq("q_id", "id"), "left_anti")
@@ -376,7 +367,7 @@ object KnnGraph {
     // the returned plan reads only this final checkpoint (made here so the
     // final topK doesn't re-run the last round per action) plus vecs/q;
     // the last round's beam/visited blocks are dead state — release them
-    val (fin, _) = checkpointReplacing(bm, pinned)
+    val fin = checkpointReplacing(bm, pinned)
     topB(fin, k).select(col("q_id"), col("id").as("nbr"), col("sim"))
   }
 
@@ -455,13 +446,12 @@ object KnnGraph {
     if (iters > 0) {
       val vecs = normalized(emb.unionByName(newEmb)).localCheckpoint()
       val smallVecs = vecs.count() * 64L * 8L < 64L * 1024 * 1024
-      var pinned = Set.empty[Int]
+      var pinned = Seq.empty[DataFrame]
       for (_ <- 1 to iters) {
-        val (cg, p) = checkpointReplacing(g, pinned)
-        g = cg; pinned = p
-        val (next, adjPinned) = descentRound(g, vecs, smallVecs, kk)
+        g = checkpointReplacing(g, pinned)
+        val (next, adj) = descentRound(g, vecs, smallVecs, kk)
+        pinned = Seq(g, adj)
         g = next
-        pinned ++= adjPinned
       }
     }
     if (kk == k) g else topK(g, k)

@@ -196,16 +196,9 @@ object SparseRidge {
           iters: Int = 16, denseLimit: Int = DenseLimit): Model = {
     require(lambda > 0, s"need lambda > 0, got $lambda")
     require(iters >= 1, s"need iters >= 1, got $iters")
-    val spark = feat.sparkSession
-    // the iterate passes re-scan this frame: checkpoint it, tracked by
-    // its own RDD-id delta and swept in finally (the qualityProbeFit
-    // discipline — never a blanket JVM-wide sweep)
-    val sc = spark.sparkContext
-    val (g, pinned) = graft.operators.Scratch.trackLock.synchronized {
-      val before = sc.getPersistentRDDs.keySet
-      val cp = groupedRaw(feat, labels).localCheckpoint()
-      (cp, (sc.getPersistentRDDs.keySet -- before).toSet)
-    }
+    // the iterate passes re-scan this frame: checkpoint it and release
+    // exactly that checkpoint in finally (never a blanket JVM-wide sweep)
+    val g = groupedRaw(feat, labels).localCheckpoint()
     try {
       // FUSED fit prefix (round 18, guide §2.3 / VERDICT r17 next #5):
       // one aggregation over the grouped frame carries b = Xᵀy per dim,
@@ -237,10 +230,7 @@ object SparseRidge {
         if (d + 1 <= denseLimit) solveDense(g, b, dims, lambda)
         else cgLoop(g, b, dims, lambda, iters, math.max(1L, nDocs))
       Model(dims, w.take(d), w(d))
-    } finally {
-      val live = sc.getPersistentRDDs
-      pinned.foreach(id => live.get(id).foreach(_.unpersist(blocking = false)))
-    }
+    } finally graft.operators.Scratch.release(g)
   }
 
   /** Small-side path: the sparse Gram XᵀX as per-doc dim-pair products

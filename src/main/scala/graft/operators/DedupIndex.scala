@@ -79,12 +79,17 @@ object DedupIndex {
   }
 
   /** One version's rows for all three subtables, overwrite-idempotent:
-    * re-running the same version replaces its own partition dirs only. */
-  private def writeTables(ds: DataFrame, p: Params, path: String, version: Long): Unit = {
-    bandsOf(ds, p).write.mode("overwrite").parquet(s"$path/bands/batch=$version")
-    ds.write.mode("overwrite").parquet(s"$path/shingles/batch=$version")
-    ds.groupBy("doc_id").agg(count(lit(1)).as("n"))
-      .write.mode("overwrite").parquet(s"$path/sizes/batch=$version")
+    * re-running the same version replaces its own partition dirs only.
+    * One checkpointed shingle pass feeds all three writes; they consume
+    * it fully, so its blocks are released before returning. */
+  private def writeTables(docs: DataFrame, p: Params, path: String, version: Long): Unit = {
+    val ds = shingleIds(docs).localCheckpoint()
+    try {
+      bandsOf(ds, p).write.mode("overwrite").parquet(s"$path/bands/batch=$version")
+      ds.write.mode("overwrite").parquet(s"$path/shingles/batch=$version")
+      ds.groupBy("doc_id").agg(count(lit(1)).as("n"))
+        .write.mode("overwrite").parquet(s"$path/sizes/batch=$version")
+    } finally Scratch.release(ds)
   }
 
   /** Version numbers present under the index (committed or not). */
@@ -192,9 +197,7 @@ object DedupIndex {
           s"(found ${children.take(5).mkString(", ")}); delete it yourself if intended")
       fs.delete(root, true)
     }
-    // one shingle pass feeds bands, shingles and sizes
-    val ds = shingleIds(docs).localCheckpoint()
-    writeTables(ds, p, path, 0L)
+    writeTables(docs, p, path, 0L)
     Seq((p.numPerms, p.numBands, p.rowsPerBand, p.modulus, p.threshold, p.maxBucket))
       .toDF("num_perms", "num_bands", "rows_per_band", "modulus", "threshold", "max_bucket")
       .repartition(1).write.mode("overwrite").json(s"$path/meta")
@@ -227,7 +230,7 @@ object DedupIndex {
   def appendVersion(docs: DataFrame, path: String, version: Long): Unit = {
     require(version >= 1, s"version must be >= 1 (0 is the base build), got $version")
     val p = params(docs.sparkSession, path)
-    writeTables(shingleIds(docs).localCheckpoint(), p, path, version)
+    writeTables(docs, p, path, version)
   }
 
   /** doc_ids the index has accepted so far (one row per indexed doc). */

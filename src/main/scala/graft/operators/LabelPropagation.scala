@@ -40,27 +40,23 @@ object LabelPropagation {
     * pass each undirected edge once. */
   def run(nodes: DataFrame, edges: DataFrame, iters: Int): DataFrame = {
     require(iters >= 0, s"need iters >= 0, got $iters")
-    val sc = nodes.sparkSession.sparkContext
     val ids = nodes.select(col("id")).localCheckpoint()
     // the adjacency is PRE-PARTITIONED (+ pre-sorted) on dst — the key
     // every round's vote join uses — when big enough to matter
     // ([[LoopCheckpoint.keyed]] — guide §2.4; the unconditional r17
     // repartition was the q_graph_communities "watch" item, measured
     // slower on latency-bound small inputs in round-18 alternating A/Bs).
-    val (adj, _) = LoopCheckpoint.keyed(
+    val adj = LoopCheckpoint.keyed(
       edges.select(col("src"), col("dst"))
         .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
         .unionByName(ids.select(col("id").as("src"), col("id").as("dst")))
         .distinct(), "dst")
     var labels = ids.withColumn("label", col("id"))
-    var pinned = Set.empty[Int]
+    var held = Seq.empty[DataFrame] // the superseded round's checkpoint
     for (_ <- 1 to iters) {
-      val before = sc.getPersistentRDDs.keySet
       labels = labels.localCheckpoint()
-      val fresh = sc.getPersistentRDDs.keySet.diff(before).toSet
-      val live = sc.getPersistentRDDs
-      pinned.foreach(id => live.get(id).foreach(_.unpersist(blocking = false)))
-      pinned = fresh
+      Scratch.release(held: _*)
+      held = Seq(labels)
       val votes = adj
         .join(labels.select(col("id").as("dst"), col("label")), "dst")
         .groupBy(col("src").as("id"), col("label"))
@@ -159,7 +155,6 @@ object LabelPropagation {
                                         adj: DataFrame, seedFrontier: DataFrame,
                                         maxRounds: Int = 50): (DataFrame, Seq[Long]) = {
     require(maxRounds >= 0, s"need maxRounds >= 0, got $maxRounds")
-    val sc = adj.sparkSession.sparkContext
     val base = labels.select(col("id"), col("label")).localCheckpoint()
     // label lookup on an arbitrary keyed frame: override beats base beats
     // self (arrivals absent from base are their own label)
@@ -170,12 +165,10 @@ object LabelPropagation {
         Seq(key), "left_outer")
       .withColumn("label", coalesce(col("_ol"), col("_bl"), col(key)))
       .drop("_bl", "_ol")
-    val before0 = sc.getPersistentRDDs.keySet
+    // round state: both checkpoints are released once the next round's
+    // replacements are materialized (the run()/PageRank discipline)
     var ov = base.limit(0).localCheckpoint() // empty overrides, (id, label)
     var frontier = seedFrontier.select(col("id")).distinct().localCheckpoint()
-    // round-superseded state blocks, swept once the next round's
-    // replacements are materialized (the run()/PageRank discipline)
-    var pinned = sc.getPersistentRDDs.keySet.diff(before0).toSet
     val stats = scala.collection.mutable.ArrayBuffer.empty[Long]
     var rounds = 0
     var done = frontier.isEmpty
@@ -192,21 +185,17 @@ object LabelPropagation {
       val recomputed = votes.join(best, "id")
         .filter(col("cnt") === col("mc"))
         .groupBy("id").agg(min(col("label")).as("label"))
-      val beforeChanged = sc.getPersistentRDDs.keySet
       val changed = recomputed.as("n")
         .join(withLabels(frontier, "id", ov).as("o"), Seq("id"))
         .filter(col("n.label") =!= col("o.label"))
         .select(col("id"), col("n.label").as("label"))
         .localCheckpoint()
-      val changedBlocks = sc.getPersistentRDDs.keySet.diff(beforeChanged).toSet
       val nChanged = changed.count()
       stats += nChanged
-      val live = sc.getPersistentRDDs
       if (nChanged == 0) {
-        changedBlocks.foreach(id => live.get(id).foreach(_.unpersist(blocking = false)))
+        Scratch.release(changed)
         done = true
       } else {
-        val before = sc.getPersistentRDDs.keySet
         // fold the change set into the overrides — full outer + coalesce
         // (union-free: a semi/anti union pair referencing `changed` twice
         // trips Catalyst's union constraint rewrite)
@@ -218,10 +207,7 @@ object LabelPropagation {
         val nextFrontier = adj
           .join(changed.select(col("id").as("dst")), Seq("dst"), "left_semi")
           .select(col("src").as("id")).distinct().localCheckpoint()
-        val fresh = sc.getPersistentRDDs.keySet.diff(before).toSet
-        (pinned ++ changedBlocks).foreach(id =>
-          live.get(id).foreach(_.unpersist(blocking = false)))
-        pinned = fresh
+        Scratch.release(ov, frontier, changed)
         ov = next
         frontier = nextFrontier
       }

@@ -47,33 +47,24 @@ object LoopCheckpoint {
   /** Eagerly checkpoint `df`; if its materialized size crosses the
     * threshold, replace the checkpoint with one hash-partitioned and
     * sorted on `key` (the per-round join key) and release the plain
-    * copy's blocks. Returns the frame plus the persistent-RDD ids it
-    * pins (callers that sweep superseded round state fold them in;
-    * others rely on the harness sweep, as before). */
-  def keyed(df: DataFrame, key: String): (DataFrame, Set[Int]) = {
+    * copy's blocks. The returned frame is itself the checkpoint: callers
+    * that sweep superseded round state [[Scratch.release]] it; others
+    * rely on the harness sweep, as before. */
+  def keyed(df: DataFrame, key: String): DataFrame = {
     val sc = df.sparkSession.sparkContext
-    // both delta windows and the release hold Scratch.trackLock, like every
-    // other attribution site: a concurrent pipeline's eager checkpoint must
-    // not land inside them and be released as this call's plain copy
-    val (cp, pinned) = Scratch.trackLock.synchronized {
-      val before = sc.getPersistentRDDs.keySet
-      val cp = df.localCheckpoint()
-      (cp, sc.getPersistentRDDs.keySet.diff(before).toSet)
-    }
+    val cp = df.localCheckpoint()
+    val id = Scratch.rddOf(cp).id
     val bytes = sc.getRDDStorageInfo
-      .filter(i => pinned.contains(i.id))
+      .filter(_.id == id)
       .map(i => i.memSize + i.diskSize).sum
     val threshold = df.sparkSession.conf
       .get(ThresholdKey, DefaultThreshold.toString).toLong
-    if (bytes < threshold) (cp, pinned)
-    else Scratch.trackLock.synchronized {
-      val beforeRe = sc.getPersistentRDDs.keySet
+    if (bytes < threshold) cp
+    else {
       val re = cp.repartition(col(key)).sortWithinPartitions(key)
         .localCheckpoint()
-      val rePinned = sc.getPersistentRDDs.keySet.diff(beforeRe).toSet
-      val live = sc.getPersistentRDDs
-      pinned.foreach(id => live.get(id).foreach(_.unpersist(blocking = false)))
-      (re, rePinned)
+      Scratch.release(cp)
+      re
     }
   }
 }

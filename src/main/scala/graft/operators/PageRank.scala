@@ -62,7 +62,6 @@ object PageRank {
                       damping: Double): DataFrame = {
     require(iters >= 0, s"need iters >= 0, got $iters")
     require(damping > 0 && damping < 1, s"need 0 < damping < 1, got $damping")
-    val sc = nodes.sparkSession.sparkContext
     val ids = nodes.select(col("id")).localCheckpoint()
     val n = ids.count()
     require(n > 0, "PageRank needs at least one node")
@@ -84,7 +83,7 @@ object PageRank {
     // when big enough to matter ([[LoopCheckpoint.keyed]] — guide §2.4;
     // the unconditional r17 repartition measured slower on latency-bound
     // small inputs, see the helper's scaladoc).
-    val (eg, _) = LoopCheckpoint.keyed(
+    val eg = LoopCheckpoint.keyed(
       e.join(outdeg, "src").select(col("src"), col("dst"), col("g")), "src")
     val dangIds = ids
       .join(outdeg.select(col("src").as("id")), Seq("id"), "left_anti")
@@ -100,16 +99,13 @@ object PageRank {
         raw.crossJoin(broadcast(tot)) // one-row scalar, never a collect
           .select(col("id"), (col("rank") / col("t")).as("rank"))
     }
-    var pinned = Set.empty[Int]
+    var held = Seq.empty[DataFrame] // the superseded round's checkpoint
     for (_ <- 1 to iters) {
       // materialize the incoming ranks once (they feed contributions AND
       // the dangling aggregate) and release the superseded round's blocks
-      val before = sc.getPersistentRDDs.keySet
       pr = pr.localCheckpoint()
-      val fresh = sc.getPersistentRDDs.keySet.diff(before).toSet
-      val live = sc.getPersistentRDDs
-      pinned.foreach(id => live.get(id).foreach(_.unpersist(blocking = false)))
-      pinned = fresh
+      Scratch.release(held: _*)
+      held = Seq(pr)
       val contrib = pr.join(eg, col("id") === col("src"))
         .groupBy("dst")
         .agg(sum((col("rank") / col("g")).cast("decimal(38,18)"))

@@ -3,6 +3,11 @@ package graft.operators
 import java.nio.file.{Files, Path, Paths}
 import java.util.Comparator
 
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.storage.StorageLevel
+
 /** Per-JVM scratch directories under java.io.tmpdir that clean themselves
   * up on JVM exit. Query-level operators that persist state between steps
   * (the dedup index, the CDC snapshot replay, the IVF index) write under a
@@ -44,18 +49,6 @@ object Scratch {
     path
   }
 
-  /** Serializes the before/after `getPersistentRDDs` delta windows that
-    * attribute freshly pinned checkpoint blocks to an owner (SubstrIndex
-    * per-path tracking, StreamingSubstr's own-batch block, IvfIndex's
-    * allowlist checkpoints). Without it, two concurrent pipelines'
-    * eager checkpoints can land inside each other's windows and each
-    * would attribute — and later sweep — the other's lineage-truncated
-    * blocks. The lock covers registration AND (for eager checkpoints)
-    * the materializing job, so concurrent micro-batches serialize that
-    * one step; their remaining work stays concurrent — correctness of
-    * block ownership over checkpoint-step parallelism. */
-  private[graft] val trackLock = new Object
-
   /** Run `body`, then release every persistent-RDD block it pinned — the
     * ONE verb behind the library's caller-must-sweep contract
     * (docs/long-lived-spark-jvm-hygiene.md). Several operators return
@@ -77,7 +70,15 @@ object Scratch {
     * (checkpoint-block-not-found), never returns a wrong answer. The
     * before/after delta is JVM-wide: like Bench's per-query sweep it
     * assumes one pipeline at a time per JVM (concurrent pipelines should
-    * scope sweeps per index path — SubstrIndex.sweep(spark, path)). */
+    * scope sweeps per index path — SubstrIndex.sweep(spark, path)).
+    *
+    * A call that owns its checkpoints holds the frames and [[release]]s
+    * them instead; only scopes that also sweep the internal checkpoints
+    * of the operators they call stay blanket: LlmOps' BPE training,
+    * mmrRerank, kCenterSample, mmrRerankPq and the MMR query twins,
+    * IvfIndex.trainPq, SubstrIndex.compact, and the per-batch scopes of
+    * StreamingQuality, StreamingFrontier, StreamingDedup and
+    * StreamingAnn. */
   def withSweep[T](spark: org.apache.spark.sql.SparkSession)(body: => T): T = {
     val sc = spark.sparkContext
     val before = sc.getPersistentRDDs.keySet
@@ -87,6 +88,41 @@ object Scratch {
       (live.keySet -- before).foreach(id =>
         live.get(id).foreach(_.unpersist(blocking = false)))
     }
+  }
+
+  /** The RDD whose blocks a `localCheckpoint` (eager or lazy) pins: the
+    * `LogicalRDD` the returned frame's plan consists of. Reading the owner
+    * off the frame itself, instead of diffing the persistent-RDD registry
+    * around the call, cannot pick up a checkpoint a concurrent pipeline
+    * made at the same moment. Fails loudly for any other plan — a derived
+    * frame such as `cp.select(...)` or one never checkpointed — naming
+    * the node found, so a release can never miss its RDD or hit another
+    * one. */
+  def rddOf(cp: DataFrame): RDD[_] = cp.queryExecution.logical match {
+    case r: LogicalRDD => r.rdd
+    case other => throw new IllegalArgumentException(
+      "Scratch.rddOf needs the frame localCheckpoint returned (a LogicalRDD " +
+        s"plan), found ${other.nodeName}")
+  }
+
+  /** Release the blocks each checkpointed frame pins (see [[rddOf]]).
+    * The frames are lineage-truncated: call it after their last action. */
+  def release(cps: DataFrame*): Unit =
+    cps.foreach(rddOf(_).unpersist(blocking = false))
+
+  /** Drain a registry of checkpoint RDDs (each taken with [[rddOf]]):
+    * unpersist the ones still persisted and return their count. */
+  private[graft] def releaseTracked(rdds: java.util.Set[RDD[_]]): Int = {
+    var n = 0
+    val it = rdds.iterator()
+    while (it.hasNext) {
+      val r = it.next()
+      if (r.getStorageLevel != StorageLevel.NONE) {
+        r.unpersist(blocking = false); n += 1
+      }
+      it.remove()
+    }
+    n
   }
 }
 

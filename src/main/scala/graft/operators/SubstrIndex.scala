@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -354,23 +355,22 @@ object SubstrIndex {
   // each other's in-flight batch blocks.
   // -------------------------------------------------------------------
 
-  private val pinnedIds =
-    new java.util.concurrent.ConcurrentHashMap[String,
-      java.util.Set[Int]]()
+  private val pinned =
+    new java.util.concurrent.ConcurrentHashMap[String, java.util.Set[RDD[_]]]()
 
-  private def trackPinned[T](spark: SparkSession, path: String)(f: => T): T =
-    // under the JVM tracking lock: a concurrent pipeline's checkpoint
-    // landing inside this before/after window would be attributed to —
-    // and later swept with — THIS path (see Scratch.trackLock)
-    Scratch.trackLock.synchronized {
-      val before = spark.sparkContext.getPersistentRDDs.keySet
-      val r = f
-      val set = pinnedIds.computeIfAbsent(path,
-        _ => java.util.concurrent.ConcurrentHashMap.newKeySet[Int]())
-      (spark.sparkContext.getPersistentRDDs.keySet -- before)
-        .foreach(id => set.add(id))
-      r
-    }
+  /** Record checkpoint `cp` under `path` for [[sweep]]; returns `cp`.
+    * Atomic per path against a concurrent [[sweep]] of the same path, so
+    * a checkpoint is never added to a set that sweep already took. */
+  private def track(path: String, cp: DataFrame): DataFrame = {
+    val rdd = Scratch.rddOf(cp)
+    pinned.compute(path, (_, set) => {
+      val s = Option(set).getOrElse(
+        java.util.concurrent.ConcurrentHashMap.newKeySet[RDD[_]]())
+      s.add(rdd)
+      s
+    })
+    cp
+  }
 
   /** Unpersist the blocks pinned by [[dedupAgainst]] calls of this JVM —
     * all of them, or only those of one index `path` — and return the
@@ -387,22 +387,13 @@ object SubstrIndex {
     * Concurrent pipelines on DIFFERENT indexes should sweep with their
     * own `path` so they cannot release each other's in-flight blocks. */
   def sweep(spark: SparkSession, path: String): Int =
-    Option(pinnedIds.remove(path)).map(releaseAll(spark, _)).getOrElse(0)
+    Option(pinned.remove(path)).map(Scratch.releaseTracked).getOrElse(0)
 
   /** JVM-wide sweep (every tracked path) — the harness/bench form. */
   def sweep(spark: SparkSession): Int = {
     var n = 0
-    val keys = pinnedIds.keySet().iterator()
+    val keys = pinned.keySet().iterator()
     while (keys.hasNext) { n += sweep(spark, keys.next()) }
-    n
-  }
-
-  private def releaseAll(spark: SparkSession, ids: java.util.Set[Int]): Int = {
-    val live = spark.sparkContext.getPersistentRDDs
-    var n = 0
-    ids.forEach { id =>
-      live.get(id).foreach { r => r.unpersist(blocking = false); n += 1 }
-    }
     n
   }
 
@@ -518,7 +509,7 @@ object SubstrIndex {
     val spark = newDocs.sparkSession
     cleanupUncommitted(spark, path)
     val (w, tok) = params(spark, path)
-    val sh = trackPinned(spark, path)(windows(newDocs, w, tok).localCheckpoint())
+    val sh = track(path, windows(newDocs, w, tok).localCheckpoint())
     // per-key count + batch-canonical via ONE k-partitioned window pass
     // (round 18 — the spansFromWindows move from the batch operator,
     // r17 #5): the groupBy(k) + join-back re-shuffled the batch's window
@@ -589,8 +580,7 @@ object SubstrIndex {
     cleanupUncommitted(spark, path)
     val vs = allVersions(spark, path)
     if (vs.size <= 1) return vs.size
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    try {
+    Scratch.withSweep(spark) {
       val folded = spark.read.parquet(s"$path/win")
         .groupBy("k").agg(min("canon").as("canon"))
         .localCheckpoint()
@@ -605,10 +595,6 @@ object SubstrIndex {
         s"compact: could not swap in $path/win_compact")
       fs.delete(new org.apache.hadoop.fs.Path(s"$path/win_old"), true)
       vs.size
-    } finally {
-      val live = spark.sparkContext.getPersistentRDDs
-      (live.keySet -- before).foreach(id =>
-        live.get(id).foreach(_.unpersist(blocking = false)))
     }
   }
 }

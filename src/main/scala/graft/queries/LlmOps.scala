@@ -1131,25 +1131,16 @@ object LlmOps {
     // narrow checkpointed slice; 4 is inside 1e-4 of the 8-step fit on
     // logistic-shaped margins and halves the per-invocation job count)
     // so the probe emits a usable probability, not just a raw margin.
-    // The slice's checkpoint blocks are tracked by THEIR OWN RDD-id delta
-    // under Scratch.trackLock and swept after the calibrate consumes them
-    // (ADVICE r11: a blanket JVM-wide withSweep inside a library operator
-    // would attribute — and sweep — a CONCURRENT pipeline's checkpoint
+    // Only the slice's own checkpoint is released after the calibrate
+    // consumes it (ADVICE r11: a blanket JVM-wide withSweep inside a
+    // library operator would sweep a CONCURRENT pipeline's checkpoint
     // registered during calibration, failing the other pipeline loudly).
-    val sc = feat.sparkSession.sparkContext
-    val (slice, pinned) = graft.operators.Scratch.trackLock.synchronized {
-      val before = sc.getPersistentRDDs.keySet
-      val cp = graft.ml.LinearProbe.predict(feat, model)
-        .filter(pmod(col("doc_id"), lit(holdoutMod)) =!= 0)
-        .select("margin", "pred", "label").localCheckpoint()
-      (cp, (sc.getPersistentRDDs.keySet -- before).toSet)
-    }
+    val slice = graft.ml.LinearProbe.predict(feat, model)
+      .filter(pmod(col("doc_id"), lit(holdoutMod)) =!= 0)
+      .select("margin", "pred", "label").localCheckpoint()
     val calib =
       try graft.ml.LinearProbe.calibrate(slice, iters = 4)
-      finally {
-        val live = sc.getPersistentRDDs
-        pinned.foreach(id => live.get(id).foreach(_.unpersist(blocking = false)))
-      }
+      finally graft.operators.Scratch.release(slice)
     (model, calib)
   }
 
@@ -1259,24 +1250,16 @@ object LlmOps {
     val model = graft.ml.SparseRidge.fit(
       feat.join(trainLabels.select("id"), "id"), trainLabels,
       lambda = lambda, iters = iters)
-    // calibration slice checkpointed and swept by its own RDD-id delta
+    // calibration slice checkpointed and only that checkpoint released
     // (the qualityProbeFit discipline) — each Newton step would otherwise
     // re-run the whole scoring pipeline
-    val sc = featL.sparkSession.sparkContext
-    val (slice, pinned) = graft.operators.Scratch.trackLock.synchronized {
-      val before = sc.getPersistentRDDs.keySet
-      val cp = wideScored(featL, model)
-        .filter(pmod(col("doc_id"), lit(holdoutMod)) =!= 0)
-        .select(col("margin"), col("pred"), col("weak_label").as("label"))
-        .localCheckpoint()
-      (cp, (sc.getPersistentRDDs.keySet -- before).toSet)
-    }
+    val slice = wideScored(featL, model)
+      .filter(pmod(col("doc_id"), lit(holdoutMod)) =!= 0)
+      .select(col("margin"), col("pred"), col("weak_label").as("label"))
+      .localCheckpoint()
     val calib =
       try graft.ml.LinearProbe.calibrate(slice, iters = 4)
-      finally {
-        val live = sc.getPersistentRDDs
-        pinned.foreach(id => live.get(id).foreach(_.unpersist(blocking = false)))
-      }
+      finally graft.operators.Scratch.release(slice)
     (model, calib)
   }
 
@@ -2150,7 +2133,7 @@ object LlmOps {
     * state per round), and applies the merge with a map-only string
     * replace on the [[bpeEncode]] encoding. The vocab is
     * localCheckpointed per round (lineage would otherwise replay all
-    * previous merges on every count pass) and swept in finally.
+    * previous merges on every count pass) and swept on exit.
     *
     * Returns (mergeTable, vocab): mergeTable rows are
     * (rank, a, b, cnt) — rank 1-based, cnt the weighted pair count at
@@ -2182,8 +2165,11 @@ object LlmOps {
       .groupBy(col("p.a").as("a"), col("p.b").as("b"))
       .agg(sum(col("f")).as("cnt"))
     val learned = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String, Long)]
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    try {
+    // the in-loop checkpoints exist only to keep count passes from
+    // replaying earlier merges; sweep them ALL — the returned vocab is
+    // rebuilt below as a fresh checkpoint-free plan, so callers never
+    // depend on a block this sweep removed
+    graft.operators.Scratch.withSweep(spark) {
       // lazy checkpoints: each vocab_i is materialized BY its round's
       // count pass (the job that needs it anyway), not by an extra
       // eager job per round — halves the job count of training
@@ -2241,14 +2227,6 @@ object LlmOps {
           rank += 1
         }
       }
-    } finally {
-      // the in-loop checkpoints exist only to keep count passes from
-      // replaying earlier merges; sweep them ALL — the returned vocab is
-      // rebuilt below as a fresh checkpoint-free plan, so callers never
-      // depend on a block this sweep removed
-      val live = spark.sparkContext.getPersistentRDDs
-      (live.keySet -- before).foreach(id =>
-        live.get(id).foreach(_.unpersist(blocking = false)))
     }
     // ONE depth-constant aggregate() fold over a single literal array of
     // merge pairs, not a merges-deep nested replace() chain (ADVICE r10:
@@ -2376,8 +2354,7 @@ object LlmOps {
     // the fused probe below collects up to localLimit + 1 rows into an array
     require(localLimit < Int.MaxValue - 1,
       s"spark.graft.mmr.localLimit = $localLimit must be below ${Int.MaxValue - 1}")
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    try {
+    graft.operators.Scratch.withSweep(spark) {
       val cd = cands.select(col("q_id").cast("long"), col("c_id").cast("long"),
         col("rel").cast("double")).localCheckpoint()
       val sm = sims.select(col("q_id").cast("long"), col("a").cast("long"),
@@ -2390,49 +2367,45 @@ object LlmOps {
       // checkpoints, never recomputes the inputs.
       val localN = (localLimit + 1).toInt
       val cdRows = cd.limit(localN).as[(Long, Long, Double)].collect()
-      if (cdRows.length <= localLimit) {
-        val smRows = sm.limit(localN).as[(Long, Long, Long, Double)].collect()
-        if (smRows.length <= localLimit)
-          return mmrGreedyLocal(spark, cdRows, smRows, k, lambda)
-      }
-      // step 1 is pure relevance: λ > 0 makes λ·rel order == rel order
-      val w1 = Window.partitionBy("q_id").orderBy(col("rel").desc, col("c_id"))
-      val first = cd
-        .withColumn("r", row_number().over(w1)).filter(col("r") === 1)
-        .select(col("q_id"), col("c_id"),
-          round(lit(lambda) * col("rel"), 6).as("mmr"), lit(1L).as("rn"))
-        .as[(Long, Long, Double, Long)].collect()
-      val picked = scala.collection.mutable.ArrayBuffer.from(first)
-      var step = 2
-      var exhausted = first.isEmpty
-      while (step <= k && !exhausted) {
-        val pickedDf = picked.toSeq.toDF("q_id", "c_id", "mmr", "rn")
-        val remaining = cd.join(pickedDf.select("q_id", "c_id"),
-          Seq("q_id", "c_id"), "left_anti")
-        val ms = remaining.as("r")
-          .join(sm.as("s"),
-            col("r.q_id") === col("s.q_id") && col("r.c_id") === col("s.a"))
-          .join(pickedDf.select(col("q_id").as("pq"), col("c_id").as("pc")),
-            col("s.q_id") === col("pq") && col("s.b") === col("pc"), "left_semi")
-          .groupBy(col("r.q_id").as("q_id"), col("r.c_id").as("c_id"),
-            col("r.rel").as("rel"))
-          .agg(max(col("s.sim")).as("ms"))
-          .withColumn("mmr", round(
-            lit(lambda) * col("rel") - lit(oneMinus) * col("ms"), 6))
-        val wi = Window.partitionBy("q_id").orderBy(col("mmr").desc, col("c_id"))
-        val pi = ms.withColumn("r", row_number().over(wi)).filter(col("r") === 1)
-          .select(col("q_id"), col("c_id"), col("mmr"), lit(step.toLong).as("rn"))
+      lazy val smRows = sm.limit(localN).as[(Long, Long, Long, Double)].collect()
+      if (cdRows.length <= localLimit && smRows.length <= localLimit)
+        mmrGreedyLocal(spark, cdRows, smRows, k, lambda)
+      else {
+        // step 1 is pure relevance: λ > 0 makes λ·rel order == rel order
+        val w1 = Window.partitionBy("q_id").orderBy(col("rel").desc, col("c_id"))
+        val first = cd
+          .withColumn("r", row_number().over(w1)).filter(col("r") === 1)
+          .select(col("q_id"), col("c_id"),
+            round(lit(lambda) * col("rel"), 6).as("mmr"), lit(1L).as("rn"))
           .as[(Long, Long, Double, Long)].collect()
-        picked ++= pi
-        exhausted = pi.isEmpty
-        step += 1
+        val picked = scala.collection.mutable.ArrayBuffer.from(first)
+        var step = 2
+        var exhausted = first.isEmpty
+        while (step <= k && !exhausted) {
+          val pickedDf = picked.toSeq.toDF("q_id", "c_id", "mmr", "rn")
+          val remaining = cd.join(pickedDf.select("q_id", "c_id"),
+            Seq("q_id", "c_id"), "left_anti")
+          val ms = remaining.as("r")
+            .join(sm.as("s"),
+              col("r.q_id") === col("s.q_id") && col("r.c_id") === col("s.a"))
+            .join(pickedDf.select(col("q_id").as("pq"), col("c_id").as("pc")),
+              col("s.q_id") === col("pq") && col("s.b") === col("pc"), "left_semi")
+            .groupBy(col("r.q_id").as("q_id"), col("r.c_id").as("c_id"),
+              col("r.rel").as("rel"))
+            .agg(max(col("s.sim")).as("ms"))
+            .withColumn("mmr", round(
+              lit(lambda) * col("rel") - lit(oneMinus) * col("ms"), 6))
+          val wi = Window.partitionBy("q_id").orderBy(col("mmr").desc, col("c_id"))
+          val pi = ms.withColumn("r", row_number().over(wi)).filter(col("r") === 1)
+            .select(col("q_id"), col("c_id"), col("mmr"), lit(step.toLong).as("rn"))
+            .as[(Long, Long, Double, Long)].collect()
+          picked ++= pi
+          exhausted = pi.isEmpty
+          step += 1
+        }
+        picked.toSeq.toDF("q_id", "c_id", "mmr", "rn")
+          .select("q_id", "rn", "c_id", "mmr")
       }
-      picked.toSeq.toDF("q_id", "c_id", "mmr", "rn")
-        .select("q_id", "rn", "c_id", "mmr")
-    } finally {
-      val live = spark.sparkContext.getPersistentRDDs
-      (live.keySet -- before).foreach(id =>
-        live.get(id).foreach(_.unpersist(blocking = false)))
     }
   }
 
@@ -2535,8 +2508,7 @@ object LlmOps {
     val spark = emb.sparkSession
     import spark.implicits._
     graft.functions.VectorFunctions.register(spark)
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    try {
+    graft.operators.Scratch.withSweep(spark) {
       val c = emb.select(col("vec_id").cast("long"),
         col("embedding").cast("array<double>").as("v")).localCheckpoint()
       val seed = c.orderBy("vec_id").limit(1)
@@ -2570,10 +2542,6 @@ object LlmOps {
       }
       picked.toSeq.map { case (rn, id, m) => (rn, id, m) }
         .toDF("rn", "vec_id", "mind")
-    } finally {
-      val live = spark.sparkContext.getPersistentRDDs
-      (live.keySet -- before).foreach(id =>
-        live.get(id).foreach(_.unpersist(blocking = false)))
     }
   }
 
@@ -2627,10 +2595,9 @@ object LlmOps {
     * corpus touches |shortlist| code rows and ZERO float rows. */
   def mmrRerankPq(spark: SparkSession, path: String, queries: DataFrame,
                   shortK: Int, k: Int, lambda: Double, nprobe: Int): DataFrame = {
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    try {
+    graft.operators.Scratch.withSweep(spark) {
       // shortlist reused three times (rel, decode-restrict, sims) —
-      // checkpoint once, swept in finally (the mmrRerank discipline)
+      // checkpoint once, swept on exit (the mmrRerank discipline)
       val cands = graft.ml.IvfIndex.searchPqIndex(spark, path, queries,
           topK = shortK, nprobe = nprobe)
         .select(col("q_id"), col("c_id"), round(col("score"), 4).as("rel"))
@@ -2645,10 +2612,6 @@ object LlmOps {
         .select(col("q_id"), col("a"), col("b"),
           round(cosExpr("va", "vb"), 4).as("sim"))
       mmrRerank(cands, sims, k, lambda)
-    } finally {
-      val live = spark.sparkContext.getPersistentRDDs
-      (live.keySet -- before).foreach(id =>
-        live.get(id).foreach(_.unpersist(blocking = false)))
     }
   }
 
@@ -2704,9 +2667,9 @@ object LlmOps {
     // otherwise recomputed for each of its three consumers (both pair
     // sides and grp) plus the components probe. The block stays pinned
     // until the caller's query lifecycle ends — the gates run under
-    // Bench's per-query sweep; long-lived library callers should sweep
-    // getPersistentRDDs after consuming the result (the dedupAgainst
-    // contract, docs/long-lived-spark-jvm-hygiene.md).
+    // Bench's per-query sweep; long-lived library callers consume the
+    // result inside Scratch.withSweep (the dedupAgainst contract,
+    // docs/long-lived-spark-jvm-hygiene.md).
     val assign = emb.crossJoin(broadcast(centroids))
       .select(col("vec_id"), col("v"), col("cent_id"),
         round(cosExpr("v", "centv"), 4).as("cc"))
@@ -2966,27 +2929,25 @@ object LlmOps {
     * is tiny relative to the corpus (near-dup pairs only), and entries
     * are keyed by session so a stopped session's blocks are never read. */
   private val pairGraphCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), (DataFrame, Set[Int])]()
+    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
   private[graft] def nearDupPairsShared(s: SparkSession, d: String): DataFrame =
     pairGraphCache.synchronized {
       val key = (s, d)
       val cached = pairGraphCache.get(key)
-      if (cached != null) cached._1
+      if (cached != null) cached
       else {
         // at most ONE graph is ever pinned per JVM: switching corpus or
         // session drops the previous entry, so stopped sessions and stale
         // checkpoints cannot accumulate in long-lived JVMs that never call
         // clearShared()
         dropShared()
-        // record which persistent-RDD ids the localCheckpoint pins, so
-        // eviction can unpersist them EAGERLY — dropping the DataFrame
-        // alone leaves the MEMORY_AND_DISK blocks to a GC-driven
-        // ContextCleaner pass, the exact block-backlog mechanism
-        // BASELINE.md's bench root-cause documents
-        val before = s.sparkContext.getPersistentRDDs.keySet
+        // the cached frame IS the checkpoint, so eviction can release its
+        // blocks EAGERLY — dropping the DataFrame alone leaves the
+        // MEMORY_AND_DISK blocks to a GC-driven ContextCleaner pass, the
+        // exact block-backlog mechanism BASELINE.md's bench root-cause
+        // documents
         val df = nearDupPairs(s, d).localCheckpoint()
-        val pinned = s.sparkContext.getPersistentRDDs.keySet.diff(before)
-        pairGraphCache.put(key, (df, pinned.toSet))
+        pairGraphCache.put(key, df)
         df
       }
     }
@@ -3023,12 +2984,8 @@ object LlmOps {
     * Library callers who need the frame across switches must copy it
     * (e.g. write to parquet) before switching. */
   private def dropShared(): Unit = {
-    pairGraphCache.forEach { (key, value) =>
-      val sc = key._1.sparkContext
-      if (!sc.isStopped) {
-        val live = sc.getPersistentRDDs
-        value._2.foreach(id => live.get(id).foreach(_.unpersist(blocking = false)))
-      }
+    pairGraphCache.forEach { (key, df) =>
+      if (!key._1.sparkContext.isStopped) graft.operators.Scratch.release(df)
     }
     pairGraphCache.clear()
   }
@@ -4612,34 +4569,29 @@ object LlmOps {
     // with the oracle recomposing all three stages (the q_pipeline_full
     // composition-hash discipline applied to retrieval).
     "q_search_hybrid_mmr" -> ((s, d) => {
-      val before = s.sparkContext.getPersistentRDDs.keySet
-      try {
-      val wf = Window.orderBy(col("rrf").desc, col("doc_id"))
-      // checkpointed: the fused shortlist otherwise re-runs BOTH
-      // retrieval arms (BM25 pipeline + vector arm) for each of its
-      // three consumers; swept in finally — mmrRerank materializes
-      val hyb = hybridFused(s, d).orderBy(col("rrf").desc, col("doc_id")).limit(10)
-        .withColumn("rn", row_number().over(wf)).filter(col("rn") <= 10)
-        .select("doc_id", "rrf")
-        .localCheckpoint()
-      val cand = hyb.select(lit(0L).as("q_id"), col("doc_id").as("c_id"),
-        col("rrf").as("rel"))
-      val emb = Tables(s, d, "embeddings")
-        .select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
-      val cv = cand.join(emb, cand("c_id") === emb("vec_id"))
-        .select(col("c_id"), col("e").as("ce"))
-      val sims = cv.select(col("c_id").as("a"), col("ce").as("va"))
-        .crossJoin(cv.select(col("c_id").as("b"), col("ce").as("vb")))
-        .filter(col("a") =!= col("b"))
-        .select(lit(0L).as("q_id"), col("a"), col("b"),
-          round(cosExpr("va", "vb"), 4).as("sim"))
-      mmrRerank(cand, sims, k = 5, lambda = 0.7)
-        .select(col("rn"), col("c_id").as("doc_id"), col("mmr"))
-        .orderBy("rn")
-      } finally {
-        val live = s.sparkContext.getPersistentRDDs
-        (live.keySet -- before).foreach(id =>
-          live.get(id).foreach(_.unpersist(blocking = false)))
+      graft.operators.Scratch.withSweep(s) {
+        val wf = Window.orderBy(col("rrf").desc, col("doc_id"))
+        // checkpointed: the fused shortlist otherwise re-runs BOTH
+        // retrieval arms (BM25 pipeline + vector arm) for each of its
+        // three consumers; swept on exit — mmrRerank materializes
+        val hyb = hybridFused(s, d).orderBy(col("rrf").desc, col("doc_id")).limit(10)
+          .withColumn("rn", row_number().over(wf)).filter(col("rn") <= 10)
+          .select("doc_id", "rrf")
+          .localCheckpoint()
+        val cand = hyb.select(lit(0L).as("q_id"), col("doc_id").as("c_id"),
+          col("rrf").as("rel"))
+        val emb = Tables(s, d, "embeddings")
+          .select(col("vec_id"), col("embedding").cast("array<double>").as("e"))
+        val cv = cand.join(emb, cand("c_id") === emb("vec_id"))
+          .select(col("c_id"), col("e").as("ce"))
+        val sims = cv.select(col("c_id").as("a"), col("ce").as("va"))
+          .crossJoin(cv.select(col("c_id").as("b"), col("ce").as("vb")))
+          .filter(col("a") =!= col("b"))
+          .select(lit(0L).as("q_id"), col("a"), col("b"),
+            round(cosExpr("va", "vb"), 4).as("sim"))
+        mmrRerank(cand, sims, k = 5, lambda = 0.7)
+          .select(col("rn"), col("c_id").as("doc_id"), col("mmr"))
+          .orderBy("rn")
       }
     }),
 
@@ -5039,8 +4991,7 @@ object LlmOps {
     // fixed small k.
     "q_search_mmr" -> ((s, d) => {
       graft.functions.VectorFunctions.register(s)
-      val before = s.sparkContext.getPersistentRDDs.keySet
-      try {
+      graft.operators.Scratch.withSweep(s) {
         val e = Tables(s, d, "embeddings")
           .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
         val q = e.filter(col("vec_id") < 10)
@@ -5050,7 +5001,7 @@ object LlmOps {
         val w = Window.partitionBy("q_id").orderBy(col("rel").desc, col("c_id"))
         // checkpointed: cand otherwise recomputes the |Q|xN scoring
         // crossJoin for each of its three consumers (rel, cv's two
-        // sides); swept in finally — mmrRerank's result is materialized
+        // sides); swept on exit — mmrRerank's result is materialized
         val cand = c.crossJoin(broadcast(q))
           .select(col("q_id"), col("c_id"), round(cosExpr("qe", "ce"), 4).as("rel"))
           .withColumn("rn0", row_number().over(w)).filter(col("rn0") <= 20)
@@ -5063,10 +5014,6 @@ object LlmOps {
           .select(col("q_id"), col("a"), col("b"),
             round(cosExpr("va", "vb"), 4).as("sim"))
         mmrRerank(cand, sims, k = 5, lambda = 0.7).orderBy("q_id", "rn")
-      } finally {
-        val live = s.sparkContext.getPersistentRDDs
-        (live.keySet -- before).foreach(id =>
-          live.get(id).foreach(_.unpersist(blocking = false)))
       }
     }),
 

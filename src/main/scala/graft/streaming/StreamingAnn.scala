@@ -44,12 +44,8 @@ object StreamingAnn {
     // sweep this batch's checkpoint blocks on exit (the append localCheck-
     // points its descent rounds): a long-lived stream must not accumulate
     // per-batch blocks (docs/long-lived-spark-jvm-hygiene.md)
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    try KnnGraph.appendVersion(spark, indexPath, batch, version)
-    finally {
-      val live = spark.sparkContext.getPersistentRDDs
-      (live.keySet -- before).foreach(id =>
-        live.get(id).foreach(_.unpersist(blocking = false)))
+    graft.operators.Scratch.withSweep(spark) {
+      KnnGraph.appendVersion(spark, indexPath, batch, version)
     }
   }
 

@@ -53,8 +53,7 @@ object StreamingDedup {
     // sweep this batch's checkpoint blocks on exit — a long-lived stream
     // must not accumulate per-batch blocks (docs/long-lived-spark-jvm-
     // hygiene.md); all three frames are fully consumed inside this call
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    try {
+    graft.operators.Scratch.withSweep(spark) {
       val docs = batch.select("doc_id", "text").localCheckpoint()
       // pairs against index ∪ batch, every pair touching a batch doc
       val pairs = DedupIndex.dedupAgainst(indexPath, docs).localCheckpoint()
@@ -90,10 +89,6 @@ object StreamingDedup {
       accepted.write.mode("overwrite").parquet(s"$outDir/accepted/batch=$batchId")
       pairs.write.mode("overwrite").parquet(s"$outDir/pairs/batch=$batchId")
       DedupIndex.appendVersion(accepted, indexPath, version)
-    } finally {
-      val live = spark.sparkContext.getPersistentRDDs
-      (live.keySet -- before).foreach(id =>
-        live.get(id).foreach(_.unpersist(blocking = false)))
     }
   }
 

@@ -53,8 +53,7 @@ object StreamingFrontier {
     // the batch's checkpoint blocks are swept on exit — a long-lived
     // stream must not accumulate per-batch blocks (the StreamingDedup
     // discipline, docs/long-lived-spark-jvm-hygiene.md)
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    try {
+    graft.operators.Scratch.withSweep(spark) {
       // bounded per batch; read twice (emit + grow) — pin it once
       val links = baseCol.map(b =>
           graft.queries.LlmOps.extractLinksResolved(
@@ -89,10 +88,6 @@ object StreamingFrontier {
           col("canon"))
       freshOnce.write.mode("overwrite").parquet(s"$outDir/new/batch=$batchId")
       if (hasLinks) growSeen(links, seenPath, seeded)
-    } finally {
-      val live = spark.sparkContext.getPersistentRDDs
-      (live.keySet -- before).foreach(id =>
-        live.get(id).foreach(_.unpersist(blocking = false)))
     }
   }
 

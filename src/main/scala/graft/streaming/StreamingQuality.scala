@@ -40,8 +40,7 @@ object StreamingQuality {
     // not accumulate per-batch blocks (the StreamingDedup discipline,
     // docs/long-lived-spark-jvm-hygiene.md).
     val spark = batch.sparkSession
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    try {
+    graft.operators.Scratch.withSweep(spark) {
       val raw = graft.queries.LlmOps.denseServedRaw(
         batch.select("doc_id", "text"), modelPath).localCheckpoint()
       graft.queries.LlmOps.denseServeFromRaw(raw, modelPath)
@@ -58,10 +57,6 @@ object StreamingQuality {
           .repartition(1).write.mode("overwrite")
           .parquet(s"$outDir/drift/batch=$batchId")
       }
-    } finally {
-      val live = spark.sparkContext.getPersistentRDDs
-      (live.keySet -- before).foreach(id =>
-        live.get(id).foreach(_.unpersist(blocking = false)))
     }
   }
 
@@ -100,8 +95,7 @@ object StreamingQuality {
     // shared-pass per batch (ADVICE r13) + per-batch block sweep — see
     // [[applyBatch]]
     val spark = batch.sparkSession
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    try {
+    graft.operators.Scratch.withSweep(spark) {
       val raw = graft.queries.LlmOps.wideServedRaw(
         batch.select("doc_id", "text"), modelPath).localCheckpoint()
       graft.queries.LlmOps.wideServeFromRaw(raw, modelPath)
@@ -119,10 +113,6 @@ object StreamingQuality {
           .repartition(1).write.mode("overwrite")
           .parquet(s"$outDir/drift/batch=$batchId")
       }
-    } finally {
-      val live = spark.sparkContext.getPersistentRDDs
-      (live.keySet -- before).foreach(id =>
-        live.get(id).foreach(_.unpersist(blocking = false)))
     }
   }
 
@@ -247,8 +237,7 @@ object StreamingQuality {
     }
     val mp = s"$modelRoot/v=$v"
     // per-batch block sweep on exit — see [[applyBatch]]
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    try {
+    graft.operators.Scratch.withSweep(spark) {
       val raw = graft.queries.LlmOps.wideServedRaw(
         batch.select("doc_id", "text"), mp).localCheckpoint()
       val empty = batch.isEmpty
@@ -284,13 +273,9 @@ object StreamingQuality {
       graft.queries.LlmOps.wideServeFromRaw(raw, mp)
         .withColumn("model_v", lit(v))
         .write.mode("overwrite").parquet(s"$outDir/scores/batch=$batchId")
-      if (empty) return
-      maybeRefreeze(batch, modelRoot, outDir, batchId, v, refreezeAfter,
-        maxShift, threshold, holdoutMod, lambda, iters)
-    } finally {
-      val live = spark.sparkContext.getPersistentRDDs
-      (live.keySet -- before).foreach(id =>
-        live.get(id).foreach(_.unpersist(blocking = false)))
+      if (!empty)
+        maybeRefreeze(batch, modelRoot, outDir, batchId, v, refreezeAfter,
+          maxShift, threshold, holdoutMod, lambda, iters)
     }
   }
 

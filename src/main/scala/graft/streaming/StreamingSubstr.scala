@@ -44,14 +44,10 @@ object StreamingSubstr {
     // must not accumulate per-batch blocks (docs/long-lived-spark-jvm-
     // hygiene.md); both frames are fully consumed inside this call.
     // dedupAgainst's blocks are released via the PER-PATH sweep and the
-    // batch's own checkpoint via a delta captured around ONLY that call,
-    // so two streams ingesting different indexes in one JVM cannot
-    // release each other's in-flight blocks (ADVICE r10).
-    val (docs, ownIds) = graft.operators.Scratch.trackLock.synchronized {
-      val before = spark.sparkContext.getPersistentRDDs.keySet
-      val d = batch.select("doc_id", "text").localCheckpoint()
-      (d, spark.sparkContext.getPersistentRDDs.keySet -- before)
-    }
+    // batch's own checkpoint by releasing exactly that frame, so two
+    // streams ingesting different indexes in one JVM cannot release each
+    // other's in-flight blocks (ADVICE r10).
+    val docs = batch.select("doc_id", "text").localCheckpoint()
     try {
       SubstrIndex.dedupAgainst(indexPath, docs)
         .write.mode("overwrite").parquet(s"$outDir/spans/batch=$version")
@@ -64,9 +60,7 @@ object StreamingSubstr {
       SubstrIndex.appendVersion(docs, indexPath, version)
     } finally {
       SubstrIndex.sweep(spark, indexPath)
-      val live = spark.sparkContext.getPersistentRDDs
-      ownIds.foreach(id =>
-        live.get(id).foreach(_.unpersist(blocking = false)))
+      graft.operators.Scratch.release(docs)
     }
   }
 

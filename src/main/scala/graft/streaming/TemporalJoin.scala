@@ -84,13 +84,10 @@ object TemporalJoin {
     }
     // checkpoint once: history feeds both the enrichment join and the
     // state fold, and reading the previous snapshot twice would race a
-    // concurrent retry's overwrite of the same files. Only the blocks
-    // THIS call pins are released after (a blanket sweep would eat other
+    // concurrent retry's overwrite of the same files. Only this
+    // checkpoint is released after (a blanket sweep would eat other
     // operators' live checkpoints in a shared session).
-    val sc = spark.sparkContext
-    val before = sc.getPersistentRDDs.keySet
     val h = history.localCheckpoint()
-    val pinned = sc.getPersistentRDDs.keySet.diff(before)
     try {
       AsOfJoin.asofBackward(facts, h, key, ts, ts, tieBreak)
         .write.mode("overwrite").parquet(s"$outDir/enriched/batch=$batchId")
@@ -125,10 +122,7 @@ object TemporalJoin {
         versions(spark, stateDir).filter(_ < p).foreach(v =>
           VersionedState.delete(spark, s"$stateDir/v$v"))
       }
-    } finally {
-      val live = sc.getPersistentRDDs
-      pinned.foreach(id => live.get(id).foreach(_.unpersist(blocking = false)))
-    }
+    } finally graft.operators.Scratch.release(h)
   }
 
   /** Attach the temporal join to a TAGGED stream: the caller unions the

@@ -36,6 +36,27 @@ class DedupIndexSuite extends SparkSpec {
     assert(incremental.forall { case (d1, d2, _) => d1 % 5 == 0 || d2 % 5 == 0 })
   }
 
+  test("build and appendVersion release their shingle checkpoint; dedupAgainst unchanged") {
+    val path = tmp("graft-dedup-release")
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    DedupIndex.build(corpusA, path)
+    DedupIndex.appendVersion(batchB.filter(col("doc_id") % 10 === 0), path, 1L)
+    val after = sc.getPersistentRDDs.keySet
+    assert((after -- before).isEmpty, s"build/appendVersion left pinned RDDs: ${after -- before}")
+    // the index over A ∪ B1 still serves B2 exactly as the batch operator
+    // over the whole corpus, restricted to pairs touching B2
+    val incremental = Scratch.withSweep(spark) {
+      DedupIndex.dedupAgainst(path, batchB.filter(col("doc_id") % 10 === 5))
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+    }
+    val batch = graft.queries.LlmOps.queries("q_dedup_minhash_sketch_xxh")(spark, sf)
+      .filter(col("d1") % 10 === 5 || col("d2") % 10 === 5)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+    assert(incremental === batch)
+    assert(incremental.nonEmpty, "fixture must actually contain near-dups touching B2")
+  }
+
   test("append == rebuild: growing index(A) by B equals building on A∪B") {
     val grown = tmp("graft-dedup-grown")
     DedupIndex.build(corpusA, grown)

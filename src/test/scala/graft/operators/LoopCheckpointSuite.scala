@@ -44,15 +44,17 @@ class LoopCheckpointSuite extends SparkSpec {
 
   test("above the threshold: key-partitioned re-checkpoint, plain copy released, same rows") {
     val sc = spark.sparkContext
-    val (plain, plainPinned) = LoopCheckpoint.keyed(degreeEdges, "src")
+    val plain = LoopCheckpoint.keyed(degreeEdges, "src")
+    val plainPinned = Set(Scratch.rddOf(plain).id)
     val firstId = sc.emptyRDD[Int].id
     val before = sc.getPersistentRDDs.keySet
     // keep the repartition's 4 shuffle partitions: AQE would coalesce this
     // small input into one, where key partitioning holds trivially
     spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    val (keyed, keyedPinned) =
+    val keyed =
       try withThreshold(4096)(LoopCheckpoint.keyed(degreeEdges, "src"))
       finally spark.conf.unset("spark.sql.adaptive.coalescePartitions.enabled")
+    val keyedPinned = Set(Scratch.rddOf(keyed).id)
     val lastId = sc.emptyRDD[Int].id
     try {
       assert(keyedPinned.nonEmpty)
@@ -83,7 +85,7 @@ class LoopCheckpointSuite extends SparkSpec {
   test("below the threshold the plain checkpoint is returned and stays pinned") {
     val sc = spark.sparkContext
     val before = sc.getPersistentRDDs.keySet
-    val (_, pinned) = LoopCheckpoint.keyed(degreeEdges, "src")
+    val pinned = Set(Scratch.rddOf(LoopCheckpoint.keyed(degreeEdges, "src")).id)
     try {
       assert(pinned.nonEmpty)
       assert(sc.getPersistentRDDs.keySet.diff(before).toSet === pinned)
@@ -99,5 +101,70 @@ class LoopCheckpointSuite extends SparkSpec {
     val low = withThreshold(4096)(ranks())
     assert(low.map { case (id, r) => (id, java.lang.Double.doubleToRawLongBits(r)) } ===
       base.map { case (id, r) => (id, java.lang.Double.doubleToRawLongBits(r)) })
+  }
+
+  test("Scratch.release unpersists exactly the frame's own checkpoint") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val cp = spark.range(0, 50).toDF("id").localCheckpoint()
+    // made between creating cp and releasing it, lazy like IvfIndex's
+    val bystander = spark.range(0, 30).toDF("id").localCheckpoint(eager = false)
+    val bystanderId = Scratch.rddOf(bystander).id
+    try {
+      assert(sc.getPersistentRDDs.keySet.diff(before).toSet ===
+        Set(Scratch.rddOf(cp).id, bystanderId))
+      Scratch.release(cp)
+      assert(sc.getPersistentRDDs.keySet.diff(before).toSet === Set(bystanderId))
+      assert(bystander.count() === 30)
+    } finally release(Set(bystanderId))
+  }
+
+  test("Scratch.rddOf refuses a frame that is not a checkpoint, naming the plan node") {
+    val cp = spark.range(0, 3).toDF("id").localCheckpoint()
+    try {
+      val plain = intercept[IllegalArgumentException](Scratch.rddOf(spark.range(3).toDF()))
+      assert(plain.getMessage.contains("Range"), plain.getMessage)
+      val derived = intercept[IllegalArgumentException](Scratch.rddOf(cp.select("id")))
+      assert(derived.getMessage.contains("Project"), derived.getMessage)
+    } finally Scratch.release(cp)
+  }
+
+  test("keyed above the threshold never releases a concurrent pipeline's checkpoints") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val firstId = sc.emptyRDD[Int].id
+    // thread B: its own eager checkpoints, made and consumed back to back
+    val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+    val theirs = new java.util.concurrent.ConcurrentLinkedQueue[(DataFrame, Long)]()
+    val other = new Thread(() =>
+      try {
+        var i = 0L
+        while (!stop.get() && i < 400) {
+          val cp = spark.range(0, 10 + i % 7).toDF("id").localCheckpoint()
+          theirs.add(cp -> cp.count())
+          i += 1
+        }
+      } catch { case t: Throwable => failure.set(t) })
+    other.start()
+    val mine =
+      try withThreshold(4096)((1 to 20).map(_ => LoopCheckpoint.keyed(degreeEdges, "src")))
+      finally { stop.set(true); other.join() }
+    val lastId = sc.emptyRDD[Int].id
+    val frames = scala.jdk.CollectionConverters.IterableHasAsScala(theirs).asScala.toSeq
+    val kept = (frames.map(_._1) ++ mine).map(Scratch.rddOf(_).id).toSet
+    try {
+      assert(failure.get() === null)
+      assert(frames.nonEmpty)
+      frames.foreach { case (cp, n) => assert(cp.count() === n) }
+      // every plain copy of the 20 keyed calls is released ...
+      assert(sc.getPersistentRDDs.keySet.diff(before).toSet === kept)
+      // ... and holds no block any more
+      val leftovers = () => SparkTestHooks.rddsWithBlocks()
+        .filter(id => id > firstId && id < lastId && !kept.contains(id))
+      val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+      while (leftovers().nonEmpty && System.nanoTime() < deadline) Thread.sleep(50)
+      assert(leftovers().isEmpty, s"plain-copy blocks still stored: ${leftovers()}")
+    } finally release(kept)
   }
 }
